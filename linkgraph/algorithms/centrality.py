@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph
+from linkgraph.graph import LinkGraph, persist_once
 from linkgraph.superstep import SuperstepLoop, iteration_conf, pick_partitions
 
 
@@ -206,7 +206,8 @@ def weighted_pagerank(
     from linkgraph.graph import name_to_id
 
     spark = graph.spark
-    ids = graph.ids().persist()
+    ids = graph.ids()
+    release_ids = persist_once(ids)
     n = ids.count()
     if n == 0:
         return ids.select("name", "id", F.lit(0.0).alias("score"))
@@ -286,7 +287,7 @@ def weighted_pagerank(
     res = ids.join(out, "id", "left").select(
         "name", "id", F.coalesce("score", F.lit(0.0)).alias("score")
     )
-    ids.unpersist()
+    release_ids()
     return res
 
 

@@ -13,7 +13,7 @@ import sys
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph
+from linkgraph.graph import LinkGraph, persist_once
 
 
 def k_core_ids(graph: LinkGraph, k: int, max_iter: int = sys.maxsize) -> DataFrame:
@@ -25,7 +25,8 @@ def k_core_ids(graph: LinkGraph, k: int, max_iter: int = sys.maxsize) -> DataFra
 
 
 def _peel(graph: LinkGraph, k: int, max_iter: int) -> DataFrame:
-    und = graph.undirected_edge_ids().persist()
+    und = graph.undirected_edge_ids()
+    release_und = persist_once(und)
     alive = (
         und.groupBy("id").agg(F.count("*").alias("d")).filter(F.col("d") >= k).select("id")
     ).persist()
@@ -52,7 +53,7 @@ def _peel(graph: LinkGraph, k: int, max_iter: int) -> DataFrame:
         if n_new == n_alive:
             break
         n_alive = n_new
-    und.unpersist()
+    release_und()
     return alive
 
 
@@ -76,7 +77,8 @@ def k_truss_edges(graph: LinkGraph, k: int, max_iter: int = sys.maxsize) -> Data
     from linkgraph.superstep import iteration_conf
 
     with iteration_conf(graph.spark):
-        edges = graph.canonical_edge_ids().persist()
+        edges = graph.canonical_edge_ids()
+        release_canonical = persist_once(edges)
         n_edges = edges.count()
         it = 0
         while it < max_iter:
@@ -96,7 +98,8 @@ def k_truss_edges(graph: LinkGraph, k: int, max_iter: int = sys.maxsize) -> Data
                 .localCheckpoint(eager=True)
             )
             n_new = survivors.count()
-            edges.unpersist()
+            if it == 1:
+                release_canonical()
             edges = survivors
             if n_new == n_edges:
                 break
@@ -146,7 +149,8 @@ def coreness(graph: LinkGraph, max_iter: int = sys.maxsize) -> DataFrame:
     from linkgraph.superstep import iteration_conf, pick_partitions
 
     spark = graph.spark
-    raw_und = graph.undirected_edge_ids().persist()
+    raw_und = graph.undirected_edge_ids()
+    release_raw = persist_once(raw_und)
     P = pick_partitions(spark, raw_und.count())
     with iteration_conf(spark, shuffle_partitions=P):
         # the adjacency is the big, static side: hash-partition it on the
@@ -159,7 +163,7 @@ def coreness(graph: LinkGraph, max_iter: int = sys.maxsize) -> DataFrame:
             .persist()
         )
         und.count()
-        raw_und.unpersist()
+        release_raw()
         state = (
             und.groupBy("id").agg(F.count("*").cast("int").alias("v")).persist()
         )
@@ -214,7 +218,8 @@ def onion_layers(graph: LinkGraph, max_rounds: int = 256) -> DataFrame:
 
     spark = graph.spark
     with iteration_conf(spark):
-        und = graph.undirected_edge_ids().persist()
+        und = graph.undirected_edge_ids()
+        release_und = persist_once(und)
         deg = und.groupBy("id").agg(F.count("*").alias("d")).persist()
         mind, n_alive = deg.agg(F.min("d"), F.count("*")).first()
         k = 0
@@ -270,7 +275,7 @@ def onion_layers(graph: LinkGraph, max_rounds: int = 256) -> DataFrame:
             mind, n_alive = new_deg.agg(F.min("d"), F.count("*")).first()
             deg.unpersist()
             deg = new_deg
-        und.unpersist()
+        release_und()
         deg.unpersist()
     if result is None:
         schema = "id long, layer long, coreness long"

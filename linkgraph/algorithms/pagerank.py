@@ -42,7 +42,7 @@ import time as _time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import LinkGraph
+from linkgraph.graph import LinkGraph, persist_once
 from linkgraph.superstep import CheckpointStore, SuperstepLoop, iteration_conf
 
 DAMPING_DEFAULT = 0.85
@@ -187,7 +187,10 @@ def pagerank_on_ids(
     if n == 0:
         return ids.select("id", F.lit(0.0).alias("score"))
 
-    raw_edges = (edge_ids if pre_deduped else edge_ids.distinct()).persist()
+    # with pre_deduped=True this is the caller's table — often a graph's
+    # memoized edge_ids(), which this function must not uncache
+    raw_edges = edge_ids if pre_deduped else edge_ids.distinct()
+    release_raw = persist_once(raw_edges)
     n_edges = raw_edges.count()
     if kernel == "auto":
         kernel = (
@@ -201,7 +204,7 @@ def pagerank_on_ids(
             spark, ids, raw_edges, n, max_iter, tol, norm, damping, iters_out,
             init_scores,
         )
-        raw_edges.unpersist()
+        release_raw()
         return out
     from linkgraph.superstep import pick_partitions
 
@@ -224,7 +227,7 @@ def pagerank_on_ids(
                 .persist()
             )
             blocks.count()
-            edges = raw_edges  # degree/fingerprint source; unpersisted below
+            edges = raw_edges  # degree/fingerprint source; released below
         else:
             # partition AND pre-sort within partitions: the per-superstep
             # contribution join is a sort-merge join of two cached
@@ -238,7 +241,7 @@ def pagerank_on_ids(
                 .persist()
             )
             edges.count()
-            raw_edges.unpersist()
+            release_raw()
         deg = (
             edges.groupBy(F.col("src_id").alias("id"))
             .agg(F.count("*").alias("out_degree"))
@@ -288,7 +291,7 @@ def pagerank_on_ids(
             store.validate_meta(meta)
             store.write_meta(meta)
         if use_blocks:
-            raw_edges.unpersist()  # blocks + static are materialized; done
+            release_raw()  # blocks + static are materialized; done
         loop = SuperstepLoop(
             spark, store=store, resume=resume, checkpoint_every=checkpoint_every
         )
@@ -590,7 +593,8 @@ def personalized_pagerank(
     n = ids.count()
     if n == 0 or not seeds:
         return ids.select("name", "id", F.lit(0.0).alias("score")).limit(0)
-    edge_ids = graph.edge_ids().persist()
+    edge_ids = graph.edge_ids()
+    release_edge_ids = persist_once(edge_ids)
     n_edges = edge_ids.count()
     P = partitions or pick_partitions(spark, n_edges)
 
@@ -669,5 +673,5 @@ def personalized_pagerank(
                 break
         edges.unpersist()
         static.unpersist()
-    edge_ids.unpersist()
+    release_edge_ids()
     return ids.join(state.select("id", "score"), "id").select("name", "id", "score")

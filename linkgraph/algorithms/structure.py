@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..graph import LinkGraph
+from ..graph import LinkGraph, persist_once
 from ..superstep import iteration_conf, pick_partitions
 
 
@@ -41,12 +41,12 @@ def densest_subgraph(
     """
     spark = graph.spark
     und = graph.canonical_edge_ids()  # (lo, hi), self-loops dropped
-    raw = und.persist()
-    P = pick_partitions(spark, raw.count())
+    release_und = persist_once(und)
+    P = pick_partitions(spark, und.count())
     snapshots: list[tuple[int, int, int]] = []  # (round, n_nodes, n_edges)
     with iteration_conf(spark, shuffle_partitions=P):
-        edges = raw.localCheckpoint(eager=True)
-        raw.unpersist()
+        edges = und.localCheckpoint(eager=True)
+        release_und()
         removed_at: DataFrame | None = None  # (id, peeled_round)
         rnd = 0
         while rnd < int(max_rounds):
@@ -338,8 +338,8 @@ def wl_refinement(
     labels engine-exact, so the oracle replays them verbatim.
     """
     spark = graph.spark
-    adj = graph.undirected_edge_ids()
-    raw = adj.persist()
+    raw = graph.undirected_edge_ids()
+    release_raw = persist_once(raw)
     P = partitions or pick_partitions(spark, raw.count())
     with iteration_conf(spark, shuffle_partitions=P):
         adj = (
@@ -348,7 +348,7 @@ def wl_refinement(
             .persist()
         )
         adj.count()
-        raw.unpersist()
+        release_raw()
         labels = (
             graph.degrees()
             .select(

@@ -9,9 +9,11 @@ a pure derivation, not mutation.
 The mining runs inside ``mapInPandas`` — Arrow-batched, vectorised pandas
 string ops, no per-row Python and **no shuffle**: extraction is map-only, so
 it scales linearly with input splits. Per the north rule, each row's
-``sha256(content)`` is recomputed in the same pass and checked against the
-source table's ``commit`` column (which the synthesiser derives from the
-content hash); mismatches raise, so silent corruption cannot leak edges.
+``sha256(content)`` is recomputed in the same pass and the source table's
+``commit`` column must be a prefix of it at least ``MIN_COMMIT_HEX`` (40)
+lowercase hex chars long (the synthesiser derives it from the content
+hash); any other commit — null, empty, short or different — raises, so
+silent corruption cannot leak edges.
 """
 
 from __future__ import annotations
@@ -40,12 +42,27 @@ IMPORT_PATTERNS: dict[str, str] = {
 _TIME_MARKER = re.compile(r"#\s*t=(-?\d+)")
 
 
+# Shortest commit accepted as a sha256(content) prefix: the 40 hex chars
+# (160 bits) of a git-style id, which the synthesisers emit.
+MIN_COMMIT_HEX = 40
+
+
 class ContentShaMismatch(ValueError):
-    """Raised when sha256(content) disagrees with the source row's commit."""
+    """Raised when a row's commit is not a prefix of at least
+    ``MIN_COMMIT_HEX`` lowercase hex chars of sha256(content) — a null,
+    empty or short commit included."""
 
 
 def _sha256_hex(s: str) -> str:
     return hashlib.sha256(s.encode("utf-8")).hexdigest()
+
+
+def _commit_matches(sha: str, commit) -> bool:
+    return (
+        isinstance(commit, str)
+        and len(commit) >= MIN_COMMIT_HEX
+        and sha.startswith(commit)
+    )
 
 
 def mine_edges(source: DataFrame, verify_sha: bool = True) -> DataFrame:
@@ -61,7 +78,7 @@ def mine_edges(source: DataFrame, verify_sha: bool = True) -> DataFrame:
         for pdf in batches:
             if verify_sha and len(pdf):
                 sha = pdf["content"].map(_sha256_hex)
-                ok = [s.startswith(c) or c.startswith(s) for s, c in zip(sha, pdf["commit"])]
+                ok = [_commit_matches(s, c) for s, c in zip(sha, pdf["commit"])]
                 if not all(ok):
                     bad = pdf.loc[[not o for o in ok], ["repo", "path"]].head(3)
                     raise ContentShaMismatch(

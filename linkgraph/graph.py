@@ -29,10 +29,28 @@ comparison, as Raphtory's AlgorithmResult is, algorithm_result.rs:114-124).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _MAX_I64 = (1 << 63) - 1
+
+
+def persist_once(df: DataFrame) -> Callable[[], object]:
+    """Cache ``df`` unless an equivalent plan is cached already; returns the
+    release callback, which unpersists only what this call cached.
+
+    Algorithms take the graph's memoized tables (``ids()``, ``edge_ids()``,
+    ...) through this, so a table the graph owns (see
+    :meth:`LinkGraph.materialize`) outlives the algorithm, while a table the
+    algorithm had to cache itself is still dropped when it is done.
+    """
+    if df.storageLevel != StorageLevel.NONE:
+        return lambda: None
+    df.persist()
+    return df.unpersist
 
 
 def name_to_id(col: Column) -> Column:
@@ -443,8 +461,25 @@ class LinkGraph:
             yield (ws, we, self.window(ws, we))
 
     def materialize(self) -> "LinkGraph":
-        """Cache + force the hot derived tables (ids, simple edges, degrees)."""
+        """Cache the event edge table and the hot derived tables, filled from
+        one pass over the input.
+
+        ``edges_t`` is cached first — for a graph built by
+        :meth:`from_source_table` it is the output of the sha-verified
+        mining pass — and ``edge_ids()`` and ``ids()`` are forced from it,
+        so the source is mined once per graph: every algorithm, and every
+        view (``window``, ``layer``, ...) taken from this graph, reads the
+        cache.  ``undirected_edge_ids()`` is persisted too but filled by its
+        first user, so a pipeline that never needs it skips its shuffle.
+
+        Caching contract: the graph owns these caches for its lifetime.
+        Algorithms read them and may cache frames of their own, but never
+        unpersist a frame they did not persist themselves (they take shared
+        tables through :func:`persist_once`).
+        """
+        self.edges_t.persist()
         for df in (self.ids(), self.edge_ids(), self.undirected_edge_ids()):
             df.persist()
         self.edge_ids().count()
+        self.ids().count()
         return self

@@ -10,9 +10,16 @@ integer outputs with ppm conversions, and bit-identical SQL replays.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+
+def _floor_div(col: str, d: int) -> Column:
+    """Exact ``floor(col / d)`` for a long column.  Spark's ``div``, like a
+    ``/`` then cast to long, truncates toward zero, which puts a negative
+    (pre-1970) time in the bucket after its own."""
+    return F.expr(f"(`{col}` - pmod(`{col}`, {int(d)}L)) div {int(d)}L")
 
 
 def funnel_counts(
@@ -82,7 +89,7 @@ def retention_cohorts(
 ) -> DataFrame:
     """Retention matrix — ``(cohort, offset, n_active)`` plus the
     ``offset = 0`` cohort-size rows: users bucketed by their FIRST
-    active time bucket (``epoch_ms div bucket_ms``), counted again in
+    active time bucket (``floor(epoch_ms / bucket_ms)``), counted again in
     each ``cohort + offset`` bucket they were active in.
 
     The cohort-retention readout behind "does this source's audience
@@ -93,10 +100,8 @@ def retention_cohorts(
     """
     t = F.unix_millis(F.col(ts_col).cast("timestamp"))
     act = (
-        events.select(
-            F.col(user_col).alias("user"),
-            (t / F.lit(bucket_ms)).cast("long").alias("b"),
-        )
+        events.select(F.col(user_col).alias("user"), t.alias("t"))
+        .select("user", _floor_div("t", bucket_ms).alias("b"))
         .distinct()
     )
     first = act.groupBy("user").agg(F.min("b").alias("cohort"))
@@ -213,11 +218,13 @@ def cusum_changepoint(
     by elapsed time (one row per hour), not data volume, so the
     single-partition window is a few thousand rows even at 100 TB of
     events; the per-bucket counts underneath are a map-side-combined
-    hash aggregate.
+    hash aggregate.  Buckets are ``floor(epoch_ms / bucket_ms)``; empty
+    input gives an empty result.
     """
     t = F.unix_millis(F.col(ts_col).cast("timestamp"))
     per = (
-        events.select((t / F.lit(int(bucket_ms))).cast("long").alias("b"))
+        events.select(t.alias("t"))
+        .select(_floor_div("t", bucket_ms).alias("b"))
         .groupBy("b")
         .agg(F.count("*").alias("n_events"))
     )
@@ -225,7 +232,7 @@ def cusum_changepoint(
     tot = per.agg(
         F.count("*").alias("T"), F.sum("n_events").alias("X")
     ).first()
-    T, X = int(tot["T"]), int(tot["X"])
+    T, X = int(tot["T"]), int(tot["X"] or 0)
     cur = (
         per.withColumn("idx", F.row_number().over(W.orderBy("b")))
         .withColumn("c", F.sum("n_events").over(w))
@@ -238,6 +245,8 @@ def cusum_changepoint(
             .alias("cusum_scaled"),
         )
     )
+    if T == 0:
+        return cur.withColumn("is_changepoint", F.lit(False))
     peak = (
         cur.orderBy(F.desc(F.abs(F.col("cusum_scaled"))), F.asc("idx"))
         .limit(1)

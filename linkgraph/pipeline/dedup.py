@@ -751,8 +751,8 @@ def paragraph_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     Returns ``(doc_id, n_paras, removed_paras, clean_chars, clean_md5)``
     — counts plus a digest of the cleaned text (kept paragraphs joined
     by a blank line, original order), same engine-exact readout contract
-    as :func:`line_dedup`.  Whitespace-only paragraphs are never counted
-    and never removed.
+    as :func:`line_dedup`.  Whitespace-only paragraphs are never keyed for
+    dedup and never removed, but they are counted in ``n_paras``.
 
     Scale shape: identical to line_dedup — only slim
     ``(md5 key, doc_id, pos)`` rows ride the shuffle (one group-by on

@@ -24,6 +24,33 @@ def test_sha_mismatch_raises(spark):
     assert "sha256" in str(ei.value)
 
 
+@pytest.mark.parametrize(
+    "commit", ["", None, "short-prefix"], ids=["empty", "null", "short"]
+)
+def test_sha_check_refuses_unbound_commits(spark, commit):
+    """A null, empty or under-40-char commit never passes the sha check
+    (an empty one used to pass as a prefix of every hash)."""
+    from pyspark.sql import functions as F
+
+    src = source_table(spark, [(1, "a", "b")])
+    if commit == "short-prefix":
+        commit_col = F.substring("commit", 1, 39)
+    else:
+        commit_col = F.lit(commit).cast("string")
+    with pytest.raises(Exception) as ei:
+        mine_edges(src.withColumn("commit", commit_col)).collect()
+    assert ContentShaMismatch.__name__ in str(ei.value)
+
+
+def test_sha_check_accepts_full_digest(spark):
+    from pyspark.sql import functions as F
+
+    src = source_table(spark, [(1, "a", "b")]).withColumn(
+        "commit", F.sha2("content", 256)
+    )
+    assert [(r.src, r.dst) for r in mine_edges(src).collect()] == [("a", "b")]
+
+
 def test_node_only_rows_become_isolated_nodes(spark):
     src = source_table(spark, [(1, "a", "b")], node_only=["lonely"])
     g = LinkGraph.from_source_table(src)

@@ -522,6 +522,43 @@ def test_cusum_changepoint_hand(spark):
     assert flags == [3]  # last bucket before the rate shift
 
 
+def _events_at(spark, times):
+    return spark.createDataFrame(
+        [(i, t, 1, "x", 0.0, "{}") for i, t in enumerate(times)],
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+    )
+
+
+def test_cusum_changepoint_empty_input(spark):
+    from linkgraph.pipeline.analytics import cusum_changepoint
+
+    out = cusum_changepoint(_events_at(spark, []))
+    assert out.collect() == []
+    assert out.columns == ["idx", "ws", "n_events", "cusum_scaled", "is_changepoint"]
+
+
+def test_time_buckets_floor_pre_1970(spark):
+    """23:30 on 1969-12-31 lies in hour bucket -1, not 0 (Spark's ``div``
+    and a cast after ``/`` both truncate toward zero)."""
+    import datetime as dt
+
+    from linkgraph.pipeline.analytics import cusum_changepoint, retention_cohorts
+
+    utc = dt.timezone.utc
+    ev = _events_at(spark, [
+        dt.datetime(1969, 12, 31, 23, 30, tzinfo=utc),
+        dt.datetime(1970, 1, 1, 0, 30, tzinfo=utc),
+    ])
+    got = sorted((r["ws"], r["n_events"]) for r in cusum_changepoint(ev).collect())
+    assert got == [(-3600, 1), (0, 1)]
+    cohorts = {
+        (r["cohort"], r["offset"]): r["n_active"]
+        for r in retention_cohorts(ev, offsets=[1]).collect()
+    }
+    assert cohorts == {(-1, 0): 1, (-1, 1): 1}
+
+
 def test_matryoshka_recall_hand(spark, vecs):
     """Full-dim prefix must give perfect recall; a 1-dim prefix on
     16-dim clustered vectors must not (sanity that the metric moves)."""
