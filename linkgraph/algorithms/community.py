@@ -479,43 +479,13 @@ def triangle_communities(
         )
         comm = labeled.groupBy("comp").agg(F.min("node").alias("community"))
         return labeled.join(comm, "comp").select("community", "node").distinct()
-    und = inc.unionByName(
-        inc.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    from linkgraph.algorithms.components import min_label_merge
+
+    pairs = inc.select(F.col("u").alias("a"), F.col("v").alias("b"))
+    pairs = pairs.unionByName(
+        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint(eager=True)
-    m = (
-        und.select(F.col("u").alias("c"))
-        .distinct()
-        .select("c", F.col("c").alias("l"))
-        .localCheckpoint(eager=True)
-    )
-    prev = m.agg(F.sum(F.col("l").cast("decimal(38,0)"))).first()[0]
-    rounds = 0
-    while True:
-        nbr_min = (
-            und.join(
-                m.select(F.col("c").alias("v"), F.col("l").alias("lv")), "v"
-            )
-            .groupBy("u")
-            .agg(F.min("lv").alias("nm"))
-        )
-        hooked = m.join(
-            nbr_min.select(F.col("u").alias("c"), "nm"), "c", "left"
-        ).select("c", F.least("l", F.coalesce("nm", F.col("l"))).alias("l"))
-        jumped = hooked.join(
-            hooked.select(F.col("c").alias("l"), F.col("l").alias("l2")),
-            "l",
-            "left",
-        ).select("c", F.coalesce("l2", F.col("l")).alias("l"))
-        m = jumped.localCheckpoint(eager=True)
-        cur = m.agg(F.sum(F.col("l").cast("decimal(38,0)"))).first()[0]
-        rounds += 1
-        if cur == prev:
-            break
-        if rounds >= int(max_rounds):
-            raise RuntimeError(
-                f"triangle_communities did not converge in {max_rounds} rounds"
-            )
-        prev = cur
+    m = min_label_merge(pairs, "triangle_communities", int(max_rounds))
     mem = tri.select(
         "tk", F.explode(F.array("a", "b", "c")).alias("node")
     ).distinct()

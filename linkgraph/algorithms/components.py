@@ -27,7 +27,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph
-from linkgraph.superstep import CheckpointStore, SuperstepLoop, iteration_conf
+from linkgraph.superstep import (
+    CheckpointStore,
+    SuperstepLoop,
+    fixpoint,
+    iteration_conf,
+    pick_partitions,
+)
 
 
 def weakly_connected_components(
@@ -37,7 +43,6 @@ def weakly_connected_components(
     broadcast_threshold: int = 1_000_000,
     checkpoint_dir: str | None = None,
     resume: bool = False,
-    checkpoint_every: int = 1,
     kernel: str = "auto",
     init_labels: DataFrame | None = None,
     iters_out: dict | None = None,
@@ -91,8 +96,6 @@ def weakly_connected_components(
         .unionByName(ids.select("id", F.col("id").alias("nbr_id")))
         .persist()
     )
-    from linkgraph.superstep import pick_partitions
-
     P = partitions or pick_partitions(spark, raw_und.count())
     with iteration_conf(spark, shuffle_partitions=P):
         # pre-sorted cache built under the loop conf (AQE off): elides the
@@ -131,9 +134,7 @@ def weakly_connected_components(
             store.validate_meta(meta)
             store.write_meta(meta)
 
-        loop = SuperstepLoop(
-            spark, store=store, resume=resume, checkpoint_every=checkpoint_every
-        )
+        loop = SuperstepLoop(spark, store=store, resume=resume)
         state, start_it = loop.begin(init)
         n = ids.count()
         use_broadcast = n <= broadcast_threshold
@@ -142,6 +143,47 @@ def weakly_connected_components(
             loop, state, und, start_it, max_iter, use_broadcast, iters_out
         )
     return state.join(ids, "id").select("name", "id", "component")
+
+
+def min_label_merge(pairs: DataFrame, name: str, max_rounds: int) -> DataFrame:
+    """``(c, l)``: every endpoint ``c`` of the SYMMETRIC pair list ``(a, b)``
+    labelled with the smallest id in its connected component.
+
+    Distributed hook + pointer-jump rounds on :func:`fixpoint`: each round
+    hooks every label to the minimum over its neighbours' labels (and its
+    own), then shortcuts ``l <- label[l]``.  Labels only decrease, so the
+    exact (decimal) label sum is the fixpoint witness — no row-diff join.
+    Every label reaches its component minimum within diameter rounds, so
+    ``max_rounds`` = largest component diameter + 1 always suffices.
+    Pass ``pairs`` cached or checkpointed: every round reads it.
+    """
+
+    def hook_jump(m: DataFrame) -> DataFrame:
+        nbr_min = (
+            pairs.join(m.select(F.col("c").alias("b"), F.col("l").alias("lb")), "b")
+            .groupBy("a")
+            .agg(F.min("lb").alias("nm"))
+        )
+        hooked = m.join(
+            nbr_min.select(F.col("a").alias("c"), "nm"), "c", "left"
+        ).select("c", F.least("l", F.coalesce("nm", F.col("l"))).alias("l"))
+        return hooked.join(
+            hooked.select(F.col("c").alias("l"), F.col("l").alias("l2")),
+            "l",
+            "left",
+        ).select("c", F.coalesce("l2", F.col("l")).alias("l"))
+
+    own = pairs.select(F.col("a").alias("c")).distinct().select(
+        "c", F.col("c").alias("l")
+    )
+    m, _ = fixpoint(
+        name,
+        own,
+        hook_jump,
+        F.sum(F.col("l").cast("decimal(38,0)")),
+        max_rounds=max_rounds,
+    )
+    return m
 
 
 def _wcc_local(spark, ids, edge_ids) -> DataFrame:

@@ -14,12 +14,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph, persist_once
+from linkgraph.superstep import (
+    fixpoint,
+    iteration_conf,
+    lazy_cut,
+    pick_partitions,
+    release_cut,
+)
 
 
 def k_core_ids(graph: LinkGraph, k: int, max_iter: int = sys.maxsize) -> DataFrame:
-    """Ids of nodes in the k-core — ``(id)``."""
-    from linkgraph.superstep import iteration_conf
+    """Ids of nodes in the k-core — ``(id)``.
 
+    ``max_iter`` is a loud guard: the peel raises ``RuntimeError`` if it has
+    not converged after that many rounds (the default never binds)."""
     with iteration_conf(graph.spark):
         return _peel(graph, k, max_iter)
 
@@ -27,14 +35,9 @@ def k_core_ids(graph: LinkGraph, k: int, max_iter: int = sys.maxsize) -> DataFra
 def _peel(graph: LinkGraph, k: int, max_iter: int) -> DataFrame:
     und = graph.undirected_edge_ids()
     release_und = persist_once(und)
-    alive = (
-        und.groupBy("id").agg(F.count("*").alias("d")).filter(F.col("d") >= k).select("id")
-    ).persist()
-    n_alive = alive.count()
-    it = 0
-    while it < max_iter:
-        it += 1
-        survivors = (
+
+    def peel(alive: DataFrame) -> DataFrame:
+        return (
             und.join(alive, "id", "left_semi")
             .join(alive.withColumnRenamed("id", "nbr_id"), "nbr_id", "left_semi")
             .groupBy("id")
@@ -42,17 +45,13 @@ def _peel(graph: LinkGraph, k: int, max_iter: int) -> DataFrame:
             .filter(F.col("d") >= k)
             .select("id")
         )
-        # alive is referenced twice per peel → plan doubles; cut periodically
-        if it % 4 == 0:
-            survivors = survivors.localCheckpoint(eager=True)
-        else:
-            survivors = survivors.persist()
-        n_new = survivors.count()
-        alive.unpersist()
-        alive = survivors
-        if n_new == n_alive:
-            break
-        n_alive = n_new
+
+    alive = (
+        und.groupBy("id").agg(F.count("*").alias("d")).filter(F.col("d") >= k).select("id")
+    )
+    alive, _ = fixpoint(
+        "k_core_ids", alive, peel, F.count("*"), max_rounds=max_iter
+    )
     release_und()
     return alive
 
@@ -69,41 +68,38 @@ def k_truss_edges(graph: LinkGraph, k: int, max_iter: int = sys.maxsize) -> Data
 
     Support counting uses the BOTH-direction view of the surviving
     canonical edges; an inner join means zero-support edges drop
-    implicitly for k ≥ 3.  Each round's output is localCheckpoint'd —
-    round r's plan would otherwise nest r triangle joins.
+    implicitly for k ≥ 3.  The rounds run on :func:`fixpoint`, which cuts
+    each round's lineage — round r's plan would otherwise nest r triangle
+    joins.  ``max_iter`` is a loud guard: the peel raises ``RuntimeError``
+    if it has not converged after that many rounds (the default never
+    binds).
     """
     if k < 3:
         raise ValueError("k-truss requires k >= 3")
-    from linkgraph.superstep import iteration_conf
+
+    def peel(edges: DataFrame) -> DataFrame:
+        und = edges.select(F.col("lo").alias("id"), F.col("hi").alias("nbr")).unionByName(
+            edges.select(F.col("hi").alias("id"), F.col("lo").alias("nbr"))
+        )
+        a = und.select(F.col("id").alias("lo"), F.col("nbr").alias("w"))
+        b = und.select(F.col("id").alias("hi"), F.col("nbr").alias("w"))
+        return (
+            edges.join(a, "lo")
+            .join(b, ["hi", "w"])
+            .groupBy("lo", "hi")
+            .agg(F.count("*").alias("support"))
+            .filter(F.col("support") >= k - 2)
+            .select("lo", "hi")
+        )
 
     with iteration_conf(graph.spark):
-        edges = graph.canonical_edge_ids()
-        release_canonical = persist_once(edges)
-        n_edges = edges.count()
-        it = 0
-        while it < max_iter:
-            it += 1
-            und = edges.select(F.col("lo").alias("id"), F.col("hi").alias("nbr")).unionByName(
-                edges.select(F.col("hi").alias("id"), F.col("lo").alias("nbr"))
-            )
-            a = und.select(F.col("id").alias("lo"), F.col("nbr").alias("w"))
-            b = und.select(F.col("id").alias("hi"), F.col("nbr").alias("w"))
-            survivors = (
-                edges.join(a, "lo")
-                .join(b, ["hi", "w"])
-                .groupBy("lo", "hi")
-                .agg(F.count("*").alias("support"))
-                .filter(F.col("support") >= k - 2)
-                .select("lo", "hi")
-                .localCheckpoint(eager=True)
-            )
-            n_new = survivors.count()
-            if it == 1:
-                release_canonical()
-            edges = survivors
-            if n_new == n_edges:
-                break
-            n_edges = n_new
+        edges, _ = fixpoint(
+            "k_truss_edges",
+            graph.canonical_edge_ids(),
+            peel,
+            F.count("*"),
+            max_rounds=max_iter,
+        )
     return edges
 
 
@@ -139,15 +135,15 @@ def coreness(graph: LinkGraph, max_iter: int = sys.maxsize) -> DataFrame:
     sorted descending); the fixpoint is exactly the peel-based coreness,
     with no sequential peel.  Values are non-increasing, so the one-row
     ``sum`` aggregate doubles as the convergence check (one driver action
-    per iteration); the per-node h-index is a window ``row_number`` +
-    hash aggregate — both shuffle on ``id`` only.
+    per iteration); the per-node h-index is one hash aggregate
+    (:func:`hindex_stage`) that shuffles on ``id`` only.  ``max_iter`` is
+    a loud guard: the fixpoint raises ``RuntimeError`` if it has not
+    converged after that many rounds (the default never binds).
 
     Consistency with the reference's k-core (k_core.rs:43-118):
     ``coreness >= k``  ⇔  membership in ``k_core_ids(graph, k)``
     (asserted in test_centrality.py).
     """
-    from linkgraph.superstep import iteration_conf, pick_partitions
-
     spark = graph.spark
     raw_und = graph.undirected_edge_ids()
     release_raw = persist_once(raw_und)
@@ -164,24 +160,13 @@ def coreness(graph: LinkGraph, max_iter: int = sys.maxsize) -> DataFrame:
         )
         und.count()
         release_raw()
-        state = (
-            und.groupBy("id").agg(F.count("*").cast("int").alias("v")).persist()
+        state, _ = fixpoint(
+            "coreness",
+            und.groupBy("id").agg(F.count("*").cast("int").alias("v")),
+            lambda state: hindex_stage(und, state),
+            F.sum("v"),
+            max_rounds=max_iter,
         )
-        total = state.agg(F.sum("v")).first()[0] or 0
-        it = 0
-        while it < max_iter:
-            it += 1
-            new_state = hindex_stage(und, state)
-            if it % 4 == 0:
-                new_state = new_state.localCheckpoint(eager=True)
-            else:
-                new_state = new_state.persist()
-            new_total = new_state.agg(F.sum("v")).first()[0] or 0
-            state.unpersist()
-            state = new_state
-            if new_total == total:
-                break
-            total = new_total
         und.unpersist()
     return state.withColumnRenamed("v", "coreness")
 
@@ -214,14 +199,14 @@ def onion_layers(graph: LinkGraph, max_rounds: int = 256) -> DataFrame:
     semantics are BOTH-distinct with self-loops counted once, matching
     ``NodeStore::degree`` (node_store.rs:245-257) and ``coreness``.
     """
-    from linkgraph.superstep import iteration_conf
-
     spark = graph.spark
     with iteration_conf(spark):
         und = graph.undirected_edge_ids()
         release_und = persist_once(und)
-        deg = und.groupBy("id").agg(F.count("*").alias("d")).persist()
-        mind, n_alive = deg.agg(F.min("d"), F.count("*")).first()
+        alive_stats = (F.min("d"), F.count("*"))
+        deg, (mind, n_alive) = lazy_cut(
+            und.groupBy("id").agg(F.count("*").alias("d")), *alive_stats
+        )
         k = 0
         layer = 0
         result: DataFrame | None = None
@@ -233,16 +218,15 @@ def onion_layers(graph: LinkGraph, max_rounds: int = 256) -> DataFrame:
                     f"({n_alive} nodes alive) — raise max_rounds"
                 )
             k = max(k, int(mind))
-            # each round's layer slice is tiny (≤ n id rows): cut it eagerly
-            # so the final union is flat and never re-derives a peeled deg
-            peeled = (
-                deg.filter(F.col("d") <= k)
-                .select(
+            # each round's layer slice is tiny (≤ n id rows): cut it so the
+            # final union is flat and never re-derives a peeled deg
+            peeled, (n_peel,) = lazy_cut(
+                deg.filter(F.col("d") <= k).select(
                     "id",
                     F.lit(layer).cast("long").alias("layer"),
                     F.lit(k).cast("long").alias("coreness"),
-                )
-                .localCheckpoint(eager=True)
+                ),
+                F.count("*"),
             )
             result = peeled if result is None else result.unionByName(peeled)
             # subtract formulation: a survivor's new degree is its old
@@ -251,32 +235,25 @@ def onion_layers(graph: LinkGraph, max_rounds: int = 256) -> DataFrame:
             # layer — never re-shuffled per round like a recount over the
             # survivor set would.  Zero-degree survivors (star centres)
             # fall out naturally at d = 0 and peel in a later round.
-            n_peel = peeled.count()
             pid = peeled.select(F.col("id").alias("nbr_id"))
             if n_peel <= 2_000_000:  # ~16 MB of longs — broadcastable
                 pid = F.broadcast(pid)
             drops = und.join(pid, "nbr_id").groupBy("id").agg(
                 F.count("*").alias("c")
             )
-            new_deg = (
+            old_deg = deg
+            deg, (mind, n_alive) = lazy_cut(
                 deg.filter(F.col("d") > k)
                 .join(drops, "id", "left")
                 .select(
                     "id",
                     (F.col("d") - F.coalesce("c", F.lit(0))).alias("d"),
-                )
+                ),
+                *alive_stats,
             )
-            if layer % 4 == 0:
-                new_deg = new_deg.localCheckpoint(eager=True)
-            else:
-                new_deg = new_deg.persist()
-            # materialize the double buffer BEFORE dropping the old cache —
-            # unpersisting first would recompute the whole deg chain
-            mind, n_alive = new_deg.agg(F.min("d"), F.count("*")).first()
-            deg.unpersist()
-            deg = new_deg
+            release_cut(old_deg)
         release_und()
-        deg.unpersist()
+        release_cut(deg)
     if result is None:
         schema = "id long, layer long, coreness long"
         return spark.createDataFrame([], schema)
@@ -315,8 +292,6 @@ def truss_decomposition(
     one sum-aggregate convergence check — state and incidence are slim
     id columns only.  Loud ``max_rounds`` guard.
     """
-    from linkgraph.superstep import iteration_conf
-
     spark = graph.spark
     with iteration_conf(spark):
         edges = graph.canonical_edge_ids().localCheckpoint(eager=True)
@@ -348,29 +323,16 @@ def truss_decomposition(
             )
             .localCheckpoint(eager=True)
         )
-        state = (
-            edges.join(
-                inc.groupBy("lo", "hi").agg(F.count("*").alias("sup")),
-                ["lo", "hi"],
-                "left",
-            )
-            .select(
-                "lo", "hi",
-                (F.coalesce("sup", F.lit(0)) + F.lit(2))
-                .cast("long")
-                .alias("tau"),
-            )
-            .localCheckpoint(eager=True)
+        state = edges.join(
+            inc.groupBy("lo", "hi").agg(F.count("*").alias("sup")),
+            ["lo", "hi"],
+            "left",
+        ).select(
+            "lo", "hi",
+            (F.coalesce("sup", F.lit(0)) + F.lit(2)).cast("long").alias("tau"),
         )
-        tot = state.agg(F.sum("tau")).first()[0]
-        rounds = 0
-        while True:
-            rounds += 1
-            if rounds > max_rounds:
-                raise RuntimeError(
-                    f"truss_decomposition: not converged after "
-                    f"{max_rounds} rounds"
-                )
+
+        def refine(state: DataFrame) -> DataFrame:
             rho = (
                 inc.join(
                     state.select(
@@ -396,19 +358,18 @@ def truss_decomposition(
                     )
                 ).alias("h")
             )
-            new_state = (
-                state.join(hvals, ["lo", "hi"], "left")
-                .select(
-                    "lo", "hi",
-                    F.greatest(
-                        F.lit(2).cast("long"), F.coalesce("h", F.lit(2))
-                    ).alias("tau"),
-                )
-                .localCheckpoint(eager=True)
+            return state.join(hvals, ["lo", "hi"], "left").select(
+                "lo", "hi",
+                F.greatest(
+                    F.lit(2).cast("long"), F.coalesce("h", F.lit(2))
+                ).alias("tau"),
             )
-            new_tot = new_state.agg(F.sum("tau")).first()[0]
-            state = new_state
-            if new_tot == tot:
-                break
-            tot = new_tot
+
+        state, _ = fixpoint(
+            "truss_decomposition",
+            state,
+            refine,
+            F.sum("tau"),
+            max_rounds=max_rounds,
+        )
     return state.select("lo", "hi", F.col("tau").alias("trussness"))

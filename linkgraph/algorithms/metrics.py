@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph
+from linkgraph.pipeline.analytics import _floor_div
 
 
 def degree_stats(graph: LinkGraph) -> DataFrame:
@@ -286,13 +287,8 @@ def inter_event_stats(
         graph.edges_t.select(
             "src", "dst", F.col("time").cast("long").alias("t")
         )
-        .select(
-            "src",
-            "dst",
-            F.floor((F.col("t") - F.lag("t").over(w)) / F.lit(int(unit_ms)))
-            .cast("long")
-            .alias("gap"),
-        )
+        .select("src", "dst", (F.col("t") - F.lag("t").over(w)).alias("dt"))
+        .select("src", "dst", _floor_div("dt", int(unit_ms)).alias("gap"))
     )
     agg = (
         gaps.groupBy("src", "dst")
@@ -344,9 +340,7 @@ def edge_turnover(graph: LinkGraph, bucket_ms: int) -> DataFrame:
         graph.edges_t.select(
             "src",
             "dst",
-            F.floor(F.col("time") / F.lit(int(bucket_ms)))
-            .cast("long")
-            .alias("bucket"),
+            _floor_div("time", int(bucket_ms)).alias("bucket"),
         )
         .distinct()
     )

@@ -22,9 +22,12 @@ by the DuckDB oracle in ``__spark_entry__``.
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linkgraph.algorithms.components import min_label_merge
 from linkgraph.graph import LinkGraph, name_to_id
 from linkgraph.superstep import iteration_conf, pick_partitions
 
@@ -64,10 +67,11 @@ def minimum_spanning_forest(
     Per round: relabel edges by current component labels (two id-keyed
     joins), drop intra-component edges, take the per-component
     ``min_by(struct(lo,hi,w), struct(w,lo,hi))`` over both orientations,
-    then merge labels by hook + pointer-jump iterations on the picked
-    label graph.  Convergence of the inner merge is checked with a
-    monotone exact-integer aggregate (labels only decrease, so the sum of
-    labels is a fixpoint witness with no row-diff join).
+    then merge labels on the picked label graph with
+    :func:`~linkgraph.algorithms.components.min_label_merge` (hook +
+    pointer-jump rounds).  ``max_rounds`` bounds the Borůvka rounds only:
+    the merge needs up to diameter + 1 rounds of the picked forest, which
+    grows with the input, and always converges, so it runs unguarded.
 
     Memory shape (the 160 M-edge lesson): the working edge set is
     COMPACTED every round — an edge intra-component under the current
@@ -151,39 +155,7 @@ def minimum_spanning_forest(
                 .distinct()
                 .localCheckpoint(eager=True)
             )
-            m = (
-                lg.select(F.col("a").alias("c"))
-                .distinct()
-                .select("c", F.col("c").alias("l"))
-                .localCheckpoint(eager=True)
-            )
-            prev_sum = m.agg(F.sum(F.col("l").cast("decimal(38,0)"))).first()[0]
-            while True:
-                # hook: min over neighbours' labels (plus own)
-                nbr_min = (
-                    lg.join(
-                        m.select(F.col("c").alias("b"), F.col("l").alias("lb")),
-                        "b",
-                    )
-                    .groupBy("a")
-                    .agg(F.min("lb").alias("nm"))
-                )
-                hooked = m.join(
-                    nbr_min.select(F.col("a").alias("c"), "nm"), "c", "left"
-                ).select(
-                    "c", F.least("l", F.coalesce("nm", F.col("l"))).alias("l")
-                )
-                # jump: l <- m[l] (pointer shortcutting)
-                jumped = hooked.join(
-                    hooked.select(F.col("c").alias("l"), F.col("l").alias("l2")),
-                    "l",
-                    "left",
-                ).select("c", F.coalesce("l2", F.col("l")).alias("l"))
-                m = jumped.localCheckpoint(eager=True)
-                cur_sum = m.agg(F.sum(F.col("l").cast("decimal(38,0)"))).first()[0]
-                if cur_sum == prev_sum:
-                    break
-                prev_sum = cur_sum
+            m = min_label_merge(lg, "minimum_spanning_forest", sys.maxsize)
             lab = (
                 lab.join(
                     m.select(F.col("c").alias("l"), F.col("l").alias("_new")),

@@ -69,7 +69,6 @@ def pagerank(
     broadcast_threshold: int = 1_000_000,
     checkpoint_dir: str | None = None,
     resume: bool = False,
-    checkpoint_every: int = 1,
     iters_out: dict | None = None,
     kernel: str = "auto",
     timings_out: list | None = None,
@@ -123,7 +122,6 @@ def pagerank(
         broadcast_threshold=broadcast_threshold,
         checkpoint_dir=checkpoint_dir,
         resume=resume,
-        checkpoint_every=checkpoint_every,
         iters_out=iters_out,
         pre_deduped=True,
         kernel=kernel,
@@ -171,7 +169,6 @@ def pagerank_on_ids(
     broadcast_threshold: int = 1_000_000,
     checkpoint_dir: str | None = None,
     resume: bool = False,
-    checkpoint_every: int = 1,
     iters_out: dict | None = None,
     pre_deduped: bool = False,
     kernel: str = "auto",
@@ -292,9 +289,7 @@ def pagerank_on_ids(
             store.write_meta(meta)
         if use_blocks:
             release_raw()  # blocks + static are materialized; done
-        loop = SuperstepLoop(
-            spark, store=store, resume=resume, checkpoint_every=checkpoint_every
-        )
+        loop = SuperstepLoop(spark, store=store, resume=resume)
         state, start_it = loop.begin(init)
 
         # sink mass of the current (previous-iteration) state

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph
-from linkgraph.superstep import iteration_conf
+from linkgraph.superstep import fixpoint, iteration_conf, pick_partitions
 
 
 def single_source_shortest_path(
@@ -409,8 +409,6 @@ def earliest_arrival_times(
     spark = graph.spark
     if not sources:
         return spark.createDataFrame([], "source long, node long, arrival long")
-    from linkgraph.superstep import pick_partitions
-
     ev_raw = graph.edges_t.select(
         name_to_id(F.col("src")).alias("u"),
         name_to_id(F.col("dst")).alias("v"),
@@ -441,45 +439,35 @@ def earliest_arrival_times(
             .filter(F.col("name").isin(seed_names))
             .select(F.col("id").alias("source"))
         )
-        state = seeds.select(
-            "source",
-            F.col("source").alias("node"),
-            F.lit(int(t0)).cast("long").alias("arrival"),
-        ).localCheckpoint(eager=True)
-        n_rows, tot = state.agg(F.count("*"), F.sum("arrival")).first()
         cmp_op = (lambda t, a: t > a) if strict else (lambda t, a: t >= a)
-        rounds = 0
-        while True:
-            rounds += 1
-            if rounds > max_rounds:
-                raise RuntimeError(
-                    f"earliest_arrival_times: not converged after "
-                    f"{max_rounds} rounds — raise max_rounds"
-                )
+
+        def relax(state: DataFrame) -> DataFrame:
             cand = (
                 state.join(ev, state.node == ev.u)
                 .filter(cmp_op(F.col("t"), F.col("arrival")))
                 .groupBy("source", F.col("v").alias("node"))
                 .agg(F.min("t").alias("cand"))
             )
-            new_state = (
-                state.join(cand, ["source", "node"], "full")
-                .select(
-                    "source",
-                    "node",
-                    # Spark least() skips NULLs — a side missing from the
-                    # full join contributes nothing to the min
-                    F.least("arrival", "cand").alias("arrival"),
-                )
-                .localCheckpoint(eager=True)
+            return state.join(cand, ["source", "node"], "full").select(
+                "source",
+                "node",
+                # Spark least() skips NULLs — a side missing from the
+                # full join contributes nothing to the min
+                F.least("arrival", "cand").alias("arrival"),
             )
-            new_rows, new_tot = new_state.agg(
-                F.count("*"), F.sum("arrival")
-            ).first()
-            state = new_state
-            if new_rows == n_rows and new_tot == tot:
-                break
-            n_rows, tot = new_rows, new_tot
+
+        state, _ = fixpoint(
+            "earliest_arrival_times",
+            seeds.select(
+                "source",
+                F.col("source").alias("node"),
+                F.lit(int(t0)).cast("long").alias("arrival"),
+            ),
+            relax,
+            F.count("*"),
+            F.sum("arrival"),
+            max_rounds=max_rounds,
+        )
         ev.unpersist()
     return state
 
@@ -512,8 +500,6 @@ def latest_departure_times(
     spark = graph.spark
     if not targets:
         return spark.createDataFrame([], "target long, node long, departure long")
-    from linkgraph.superstep import iteration_conf, pick_partitions
-
     ev_raw = graph.edges_t.select(
         name_to_id(F.col("src")).alias("u"),
         name_to_id(F.col("dst")).alias("v"),
@@ -544,44 +530,34 @@ def latest_departure_times(
             .filter(F.col("name").isin(names))
             .select(F.col("id").alias("target"))
         )
-        state = seeds.select(
-            "target",
-            F.col("target").alias("node"),
-            F.lit(int(t1)).cast("long").alias("departure"),
-        ).localCheckpoint(eager=True)
-        n_rows, tot = state.agg(F.count("*"), F.sum("departure")).first()
         cmp_op = (lambda t, d: t < d) if strict else (lambda t, d: t <= d)
-        rounds = 0
-        while True:
-            rounds += 1
-            if rounds > max_rounds:
-                raise RuntimeError(
-                    f"latest_departure_times: not converged after "
-                    f"{max_rounds} rounds — raise max_rounds"
-                )
+
+        def relax(state: DataFrame) -> DataFrame:
             cand = (
                 state.join(ev, state.node == ev.v)
                 .filter(cmp_op(F.col("t"), F.col("departure")))
                 .groupBy("target", F.col("u").alias("node"))
                 .agg(F.max("t").alias("cand"))
             )
-            new_state = (
-                state.join(cand, ["target", "node"], "full")
-                .select(
-                    "target",
-                    "node",
-                    # greatest() skips NULLs, mirroring least() forward
-                    F.greatest("departure", "cand").alias("departure"),
-                )
-                .localCheckpoint(eager=True)
+            return state.join(cand, ["target", "node"], "full").select(
+                "target",
+                "node",
+                # greatest() skips NULLs, mirroring least() forward
+                F.greatest("departure", "cand").alias("departure"),
             )
-            new_rows, new_tot = new_state.agg(
-                F.count("*"), F.sum("departure")
-            ).first()
-            state = new_state
-            if new_rows == n_rows and new_tot == tot:
-                break
-            n_rows, tot = new_rows, new_tot
+
+        state, _ = fixpoint(
+            "latest_departure_times",
+            seeds.select(
+                "target",
+                F.col("target").alias("node"),
+                F.lit(int(t1)).cast("long").alias("departure"),
+            ),
+            relax,
+            F.count("*"),
+            F.sum("departure"),
+            max_rounds=max_rounds,
+        )
         ev.unpersist()
     return state
 
@@ -648,7 +624,6 @@ def fastest_path_durations(
     from pyspark.sql import Window
 
     from linkgraph.graph import name_to_id
-    from linkgraph.superstep import pick_partitions
 
     spark = graph.spark
     if not sources:

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import LinkGraph, persist_once
-from ..superstep import iteration_conf, pick_partitions
+from ..superstep import fixpoint, iteration_conf, pick_partitions
 
 
 def densest_subgraph(
@@ -911,32 +911,24 @@ def dag_path_counts(graph: LinkGraph, max_rounds: int = 64) -> DataFrame:
     base = nodes.join(src_flag, "id", "left").select(
         "id", F.coalesce("s", F.lit(0)).cast("long").alias("s")
     ).localCheckpoint(eager=True)
-    state = base.select("id", F.col("s").alias("p"))
-    tot = state.agg(F.sum("p")).first()[0]
-    rounds = 0
-    while True:
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError(
-                f"dag_path_counts: not converged after {max_rounds} rounds"
-            )
+
+    def propagate(state: DataFrame) -> DataFrame:
         contrib = (
             edges.join(state.select(F.col("id").alias("lo"), "p"), "lo")
             .groupBy(F.col("hi").alias("id"))
             .agg(F.sum("p").alias("inc"))
         )
-        state = (
-            base.join(contrib, "id", "left")
-            .select(
-                "id",
-                (F.col("s") + F.coalesce("inc", F.lit(0))).alias("p"),
-            )
-            .localCheckpoint(eager=True)
+        return base.join(contrib, "id", "left").select(
+            "id", (F.col("s") + F.coalesce("inc", F.lit(0))).alias("p")
         )
-        new_tot = state.agg(F.sum("p")).first()[0]
-        if new_tot == tot:
-            break
-        tot = new_tot
+
+    state, _ = fixpoint(
+        "dag_path_counts",
+        base.select("id", F.col("s").alias("p")),
+        propagate,
+        F.sum("p"),
+        max_rounds=max_rounds,
+    )
     # isolated nodes (in graph.ids() but touching no edge) are trivially
     # in-degree-0 sources: exactly one path (the empty one) reaches them —
     # same convention as sibling operators (k4_counts, role_features) that

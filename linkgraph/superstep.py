@@ -11,7 +11,7 @@ Job::Check at :176-184, morcel size 16k at :229). Our analogue:
   only the previous iteration, exactly like ``prev()``/``get_mut()``);
 - a tiny one-row aggregate collected to the driver decides convergence;
 - lineage is truncated so the logical plan doesn't grow unboundedly across
-  iterations (persist each state, ``localCheckpoint`` every few supersteps);
+  iterations;
 - per the north rule, vertex state checkpoints to a table per superstep with
   a lineage row ``(partition_id, iteration, rows, checksum, wall_ms)``
   (checksum observed during the write — no readback) so any run resumes
@@ -22,16 +22,40 @@ The checkpoint store targets Iceberg when an Iceberg catalog is on the
 classpath (``df.writeTo(table)``); this sandbox image has no Iceberg jars,
 so the same layout is written as parquet snapshot directories — identical
 interface, per-snapshot atomic commit via the lineage append.
+
+Two drivers run the loops:
+
+- :func:`fixpoint` — for loops whose state has converged when a one-row
+  aggregate of it (the *witness*) stops changing: ``kcore`` (k-core peel,
+  k-truss peel, coreness, truss decomposition), ``structure.dag_path_counts``,
+  ``paths.earliest_arrival_times`` / ``latest_departure_times`` and the
+  min-label hook + pointer-jump merge ``components.min_label_merge`` (the
+  superstep kernel of ``community.triangle_communities`` and the per-round
+  merge of ``mst.minimum_spanning_forest``).  Each round is ONE Spark job: a
+  lazy ``localCheckpoint`` whose first consumer is the witness aggregate, so
+  the job computes, stores and measures the round; the superseded round is
+  freed once the next is stored (:func:`release_cut`).
+  ``kcore.onion_layers`` stops on an empty alive set instead, so it keeps its
+  own loop but takes the same cut (:func:`lazy_cut`) and release.
+- :class:`SuperstepLoop` — for pagerank, hits, the centrality power
+  iterations and weakly connected components.  They measure each round
+  against the PREVIOUS state (a delta or changed-row join), so both
+  buffers stay persisted; pagerank and wcc also write every round to a
+  :class:`CheckpointStore` and resume from it.  Each round persists the
+  state, measures it, and cuts lineage eagerly at commit — two jobs per
+  round.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time as _time
+from collections.abc import Callable
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -190,11 +214,8 @@ class CheckpointStore:
         )
         lineage.write.mode("append").parquet(self._lineage_path)
         if metrics is not None:
-            self.emit_metrics({"iteration": iteration, **metrics})
-
-    def emit_metrics(self, record: dict) -> None:
-        with open(self._metrics_path, "a") as f:
-            f.write(json.dumps(record) + "\n")
+            with open(self._metrics_path, "a") as f:
+                f.write(json.dumps({"iteration": iteration, **metrics}) + "\n")
 
     # -- read ------------------------------------------------------------
     def last_completed(self) -> int | None:
@@ -239,7 +260,7 @@ TRUNCATE_SMALL_ROWS = 5_000_000
 class SuperstepLoop:
     """State-buffer management for iterated DataFrame algorithms.
 
-    Handles persist/unpersist of the double buffer, periodic
+    Handles persist/unpersist of the double buffer, size-adaptive
     ``localCheckpoint`` lineage truncation, optional durable checkpoints,
     and resume. Algorithms drive it::
 
@@ -250,7 +271,6 @@ class SuperstepLoop:
             delta = ...one-row agg joining new_state vs state...
             state = loop.commit(it, metrics={"delta": delta})    # prev dropped
             if converged: break
-        result = loop.finish(state)
     """
 
     def __init__(
@@ -258,35 +278,26 @@ class SuperstepLoop:
         spark: SparkSession,
         store: CheckpointStore | None = None,
         resume: bool = False,
-        truncate_every: int | str = "auto",  # see the cadence table above
-        checkpoint_every: int = 1,
     ):
         self.spark = spark
         self.store = store
         self.resume = resume
-        self.truncate_every = (
-            truncate_every if truncate_every == "auto" else max(1, truncate_every)
-        )
-        self.checkpoint_every = max(1, checkpoint_every)
+        self._truncate = True  # set from the state size by begin()
         self._live: DataFrame | None = None
         self._staged: DataFrame | None = None
 
-    def _resolve_cadence(self, state_rows: int) -> None:
-        if self.truncate_every == "auto":
-            self.truncate_every = 1 if state_rows <= TRUNCATE_SMALL_ROWS else 10**9
-
     def begin(self, initial: DataFrame) -> tuple[DataFrame, int]:
+        start = 1
+        state = initial
         if self.store is not None and self.resume:
             last = self.store.last_completed()
             if last is not None:
-                state = self.store.load(last).persist()
-                self._resolve_cadence(state.count())
-                self._live = state
-                return state, last + 1
-        state = initial.persist()
-        self._resolve_cadence(state.count())
+                state, start = self.store.load(last), last + 1
+        state = state.persist()
+        # see the cadence table above
+        self._truncate = state.count() <= TRUNCATE_SMALL_ROWS
         self._live = state
-        return state, 1
+        return state, start
 
     def stage(self, new_state: DataFrame, iteration: int, materialize: bool = True) -> DataFrame:
         """Persist the next state buffer; the previous buffer stays live so
@@ -305,12 +316,10 @@ class SuperstepLoop:
     def commit(self, iteration: int, metrics: dict | None = None) -> DataFrame:
         """Swap buffers: checkpoint the staged state, drop the previous one."""
         assert self._staged is not None, "stage() must precede commit()"
-        if self.store is not None and iteration % self.checkpoint_every == 0:
+        if self.store is not None:
             self.store.save(self._staged, iteration, metrics)
-        elif self.store is not None and metrics is not None:
-            self.store.emit_metrics({"iteration": iteration, **metrics})
         staged = self._staged
-        if iteration % self.truncate_every == 0:
+        if self._truncate:
             # hard plan-lineage cut: without this the logical plan nests one
             # join deeper per superstep and Catalyst analysis time blows up.
             # Cutting at COMMIT time reads the (already materialized) cache
@@ -325,5 +334,93 @@ class SuperstepLoop:
             prev.unpersist()
         return self._live
 
-    def finish(self, state: DataFrame) -> DataFrame:
-        return state
+
+_log = logging.getLogger("linkgraph.superstep")
+
+
+def lazy_cut(df: DataFrame, *aggs: Column) -> tuple[DataFrame, Row]:
+    """Cut ``df``'s lineage and measure it in ONE Spark job.
+
+    ``localCheckpoint(eager=False)`` only marks the frame; the one-row
+    ``aggs`` aggregate is its first consumer, so that job computes the
+    frame, stores its blocks and returns the aggregate row.  Every later
+    reader starts from the stored blocks, and the cut does not inherit the
+    size estimate of the plan it cut (:func:`_without_origin_stats`).
+    """
+    df = _without_origin_stats(df.localCheckpoint(eager=False))
+    return df, df.agg(*aggs).first()
+
+
+def _without_origin_stats(cut: DataFrame) -> DataFrame:
+    """``cut`` (a local checkpoint) with the plan statistics it inherits
+    from the plan it cut dropped; Spark then sizes it at
+    ``spark.sql.defaultSizeInBytes``, like any RDD-backed frame.
+
+    Spark sizes a join as the PRODUCT of its sides, and a checkpoint keeps
+    the size of the plan it cut.  A step that joins the state with itself
+    (the pointer jump; the ``state`` full join of the temporal relaxations)
+    therefore squares the estimate every round: its bit length doubles per
+    round and, a dozen to twenty rounds in, planning one round takes minutes
+    of BigInteger arithmetic.  The partitioning and the stored blocks are kept.
+    """
+    spark = cut.sparkSession
+    jvm = spark._jvm
+    lp = cut._jdf.queryExecution().logical()
+    none = jvm.scala.Option.empty()
+    lp = lp.copy(
+        lp.output(), lp.rdd(), lp.outputPartitioning(), lp.outputOrdering(),
+        lp.isStreaming(), lp.stream(), spark._jsparkSession, none, none,
+    )
+    return DataFrame(
+        jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, lp),
+        spark,
+    )
+
+
+def release_cut(df: DataFrame) -> None:
+    """Free the stored blocks of a frame cut by :func:`lazy_cut`.
+
+    ``df.unpersist()`` does not reach them: a local checkpoint is an RDD
+    persisted outside the cache manager, which Spark frees only once a JVM
+    garbage collection drops it — so a loop that cuts every round keeps
+    every superseded round on the executors until then.  Call this when
+    the next round is stored; nothing may read ``df`` afterwards.
+    """
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def fixpoint(
+    name: str,
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    *witness: Column,
+    max_rounds: int,
+) -> tuple[DataFrame, int]:
+    """Iterate ``state = step(state)`` until the witness stops changing.
+
+    ``witness`` is the one-row aggregate (one or more columns) that
+    converges with the state — e.g. ``F.sum("v")`` for values that only
+    decrease.  The initial state and every round are cut with
+    :func:`lazy_cut`, so each round is one Spark job, and the superseded
+    round is released as soon as the next one is stored.  Returns the
+    final state and the number of rounds run; the round whose witness
+    equals the previous one is the last.  Raises ``RuntimeError`` if
+    ``max_rounds`` rounds do not converge, and logs one DEBUG record per
+    round to the ``linkgraph.superstep`` logger.
+    """
+    state, prev = lazy_cut(state, *witness)
+    for rnd in range(1, max_rounds + 1):
+        t0 = _time.monotonic()
+        old = state
+        state, cur = lazy_cut(step(state), *witness)
+        release_cut(old)
+        _log.debug(
+            "%s round=%d witness=%s wall_s=%.3f",
+            name, rnd, tuple(cur), _time.monotonic() - t0,
+        )
+        if cur == prev:
+            return state, rnd
+        prev = cur
+    raise RuntimeError(
+        f"{name}: not converged after {max_rounds} rounds — raise max_rounds"
+    )

@@ -82,13 +82,22 @@ def test_hyperball_estimate_monotone_and_saturates(spark):
 
 
 def test_edge_turnover_hand_example(spark):
+    # K * DAY is past 2^53: one ms before it (or past its negation) a
+    # float division rounds onto the bucket boundary, floor(t / DAY) is off
+    # by one, and the bucket must come from exact integer arithmetic
+    K = 104_249_992
     edges = [
         (0, "a", "b"), (1 * DAY, "a", "b"), (1 * DAY, "c", "d"),
         (3 * DAY, "a", "b"),
+        (-K * DAY - 1, "x", "y"), (K * DAY - 1, "x", "y"),
     ]
     g = LinkGraph.from_edge_list(spark, edges)
     got = {r["bucket"]: r for r in edge_turnover(g, bucket_ms=DAY).collect()}
-    assert set(got) == {0, 1, 3}  # bucket 2 has no events: no row
+    # bucket 2 has no events: no row
+    assert set(got) == {-K - 1, 0, 1, 3, K - 1}
+    for b in (-K - 1, K - 1):
+        r = got[b]
+        assert (r["n_edges"], r["births"], r["deaths"], r["survived"]) == (1, 1, 0, 0)
     b0 = got[0]
     assert (b0["n_edges"], b0["births"], b0["deaths"], b0["survived"]) == (1, 1, 0, 0)
     assert b0["jaccard"] == 0.0

@@ -20,6 +20,7 @@ from linkgraph.algorithms import (
 from linkgraph.algorithms.metrics import inter_event_stats
 
 DAY = 86_400_000
+K = 104_249_992  # K * DAY > 2^53
 
 # path 1-2-3-4 plus the disconnected pair 5-6 (n = 6 nodes)
 PATH_PLUS_PAIR = [
@@ -137,10 +138,14 @@ def test_inter_event_stats_hand_example(spark):
         [(d * DAY, "a", "b") for d in (0, 1, 3, 6)]  # gaps 1, 2, 3 days
         + [(5 * DAY, "c", "d")] * 3                   # all simultaneous
         + [(0, "e", "f"), (DAY, "e", "f")]            # 2 events: filtered
+        # gaps 1 and K-1 days: K days less 1 ms is past 2^53 ms, where a
+        # float division rounds up to exactly K
+        + [(0, "g", "h"), (DAY, "g", "h"), (DAY + K * DAY - 1, "g", "h")]
     )
     g = LinkGraph.from_edge_list(spark, edges)
     got = {(r["src"], r["dst"]): r for r in inter_event_stats(g).collect()}
-    assert set(got) == {("a", "b"), ("c", "d")}
+    assert set(got) == {("a", "b"), ("c", "d"), ("g", "h")}
+    assert got[("g", "h")]["mean_gap"] == K / 2
     ab = got[("a", "b")]
     mean = 2.0
     var = (1 + 4 + 9) / 3 - mean * mean

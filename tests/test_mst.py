@@ -120,6 +120,29 @@ def test_msf_explicit_weights_prefer_cheap_edges(spark):
     assert got == {(1, 2), (2, 3)}
 
 
+def test_msf_long_merge_chain_is_not_cut_by_max_rounds(spark):
+    # path 0 - n - (n-1) - ... - 1 with weights rising along it: round 0
+    # picks every edge, and in the label merge the 0-label moves one hop
+    # per round, so the merge needs about n rounds — far above the
+    # Borůvka max_rounds, which must not bound it
+    n = 70
+    order = [0] + list(range(n, 0, -1))
+    path = [
+        (min(a, b), max(a, b), w + 1)
+        for w, (a, b) in enumerate(zip(order, order[1:]))
+    ]
+    g = LinkGraph(
+        spark.createDataFrame(
+            [(i, str(lo), str(hi)) for i, (lo, hi, _) in enumerate(path)],
+            "time long, src string, dst string",
+        )
+    )
+    w = spark.createDataFrame(path, "lo long, hi long, w long")
+    got = minimum_spanning_forest(g, weights=w, max_rounds=32).collect()
+    assert {(r["lo"], r["hi"], r["w"]) for r in got} == _kruskal(path)
+    assert {r["round"] for r in got} == {0}
+
+
 # ------------------------------------------------- nominal assortativity
 
 

@@ -1,0 +1,97 @@
+"""``superstep.fixpoint`` on a toy frame: the stop rule, the loud guard,
+one Spark job per round, one DEBUG record per round, superseded rounds
+released.
+
+The toy state halves every value each round (``v -> max(v) div 2`` per
+id, a shuffle per round), so ``sum(v)`` runs 800, 400, 200, 96, 48, 24,
+8, 0, 0 and the witness first repeats in round 8.
+"""
+
+import logging
+
+import pytest
+from pyspark.sql import functions as F
+
+from linkgraph.superstep import fixpoint, iteration_conf
+
+ROUNDS = 8
+
+
+def _start(spark):
+    return spark.range(8).select("id", F.lit(100).cast("long").alias("v"))
+
+
+def _halve(state):
+    return state.groupBy("id").agg(F.expr("max(v) div 2").alias("v"))
+
+
+def test_fixpoint_stops_on_witness_equality(spark):
+    state, rounds = fixpoint("halve", _start(spark), _halve, F.sum("v"), max_rounds=64)
+    assert rounds == ROUNDS
+    assert {r["v"] for r in state.collect()} == {0}
+
+
+def test_fixpoint_raises_at_max_rounds(spark):
+    with pytest.raises(RuntimeError, match="halve: not converged after 3 rounds"):
+        fixpoint("halve", _start(spark), _halve, F.sum("v"), max_rounds=3)
+    # the round that repeats the witness may be the last one allowed
+    _, rounds = fixpoint(
+        "halve", _start(spark), _halve, F.sum("v"), max_rounds=ROUNDS
+    )
+    assert rounds == ROUNDS
+
+
+def test_fixpoint_runs_one_job_per_round(spark):
+    sc = spark.sparkContext
+    group = "test-fixpoint-jobs"
+    with iteration_conf(spark, shuffle_partitions=4):
+        sc.setJobGroup(group, group)
+        try:
+            _, rounds = fixpoint(
+                "halve",
+                _start(spark),
+                _halve,
+                F.count("*"),
+                F.sum("v"),
+                max_rounds=64,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    # one job cuts and measures the initial state, then one per round
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == rounds + 1
+
+
+def test_fixpoint_logs_one_debug_record_per_round(spark, caplog):
+    caplog.set_level(logging.DEBUG, logger="linkgraph.superstep")
+    _, rounds = fixpoint("halve", _start(spark), _halve, F.sum("v"), max_rounds=64)
+    records = [r for r in caplog.records if r.name == "linkgraph.superstep"]
+    assert [r.levelno for r in records] == [logging.DEBUG] * rounds
+    assert [r.args[:2] for r in records] == [("halve", i) for i in range(1, rounds + 1)]
+    assert records[-1].args[2] == records[-2].args[2] == (0,)
+
+
+def test_fixpoint_releases_superseded_rounds(spark):
+    # every round is a local checkpoint; only the returned one stays stored
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    state, rounds = fixpoint(
+        "halve", _start(spark), _halve, F.sum("v"), max_rounds=64
+    )
+    assert rounds == ROUNDS
+    assert persistent().size() - before <= 1
+    assert state.agg(F.sum("v")).first()[0] == 0
+
+
+def test_fixpoint_cut_does_not_inherit_the_plan_size(spark):
+    # Spark sizes a join as the product of its sides: a step that joins the
+    # state with itself squares the estimate, and a cut that kept it would
+    # double its bit length every round (minutes of planning by round ~20)
+    def step(state):
+        return _halve(state.join(state.select("id", F.col("v").alias("w")), "id"))
+
+    start = spark.range(8).select("id", F.lit(1 << 12).cast("long").alias("v"))
+    state, rounds = fixpoint("self-join", start, step, F.sum("v"), max_rounds=64)
+    assert rounds == 14
+    size = state._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert size.bit_length() <= 64

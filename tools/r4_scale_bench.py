@@ -161,7 +161,7 @@ def resume_worker(resume: bool) -> None:
     res = pagerank_on_ids(
         spark, nodes, edges, max_iter=RS_ITERS, tol=0.0, norm="l1",
         partitions=32, pre_deduped=True, kernel="superstep",
-        checkpoint_dir=RS_CK, resume=resume, checkpoint_every=1,
+        checkpoint_dir=RS_CK, resume=resume,
     )
     res.write.format("noop").mode("overwrite").save()
     wall = time.monotonic() - t0
