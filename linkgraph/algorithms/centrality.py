@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph, persist_once
-from linkgraph.superstep import SuperstepLoop, iteration_conf, pick_partitions
+from linkgraph.superstep import SuperstepLoop, iteration_conf, pick_partitions, seminaive
 
 
 def _message_edges(graph: LinkGraph, direction: str) -> DataFrame:
@@ -351,11 +351,12 @@ def multi_source_bfs(
     """All-shortest-distance table from a seed set — ``(seed, id, dist)``,
     one row per reached (seed, node) pair including dist 0 for the seeds.
 
-    ONE multi-source BFS: state is ``(seed_id, id, dist)``, each level a
-    single frontier join + anti-join against the visited set, so the wall
-    is O(diameter) supersteps regardless of how many seeds ride along.
-    Shared by :func:`harmonic_centrality` and
-    :func:`neighborhood_function`.
+    ONE multi-source BFS on :func:`~linkgraph.superstep.seminaive`: state
+    is ``(seed_id, id, dist)``, each level a single frontier join +
+    anti-join against the visited set, so the wall is O(diameter)
+    supersteps regardless of how many seeds ride along.  Shared by
+    harmonic, closeness, neighbourhood function, eccentricity, landmarks
+    and efficiency.
     """
     spark = graph.spark
     if direction == "both":
@@ -385,30 +386,22 @@ def multi_source_bfs(
         )
         nbrs.count()
         raw_nbrs.unpersist()
-        visited = seed_ids.select(
-            F.col("id").alias("seed"), F.col("id"), F.lit(0).alias("dist")
-        ).localCheckpoint(eager=True)
-        frontier = visited
-        depth = 0
-        while depth < max_depth:
-            depth += 1
-            # eager lineage cut EVERY level (frontier state is at most
-            # visited-set sized — the ≤5M-row cadence rule), and no
-            # persist(): checkpoint blocks carry no CacheManager pin, so
-            # superseded frontiers are released by the ContextCleaner as
-            # their references drop — repeated calls in one session no
-            # longer accumulate executor storage
-            nxt = (
+
+        def expand(frontier: DataFrame, visited: DataFrame) -> DataFrame:
+            # the depth limit empties the frontier: no level past max_depth
+            frontier = frontier.filter(F.col("dist") < max_depth)
+            return (
                 frontier.join(nbrs, frontier.id == nbrs.from_id)
-                .select("seed", F.col("to_id").alias("id"), F.lit(depth).alias("dist"))
+                .select("seed", F.col("to_id").alias("id"), (F.col("dist") + 1).alias("dist"))
                 .join(visited.select("seed", "id"), ["seed", "id"], "left_anti")
                 .distinct()
-                .localCheckpoint(eager=True)
             )
-            if nxt.isEmpty():
-                break
-            visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-            frontier = nxt
+
+        seeds = seed_ids.select(F.col("id").alias("seed"), "id", F.lit(0).alias("dist"))
+        visited, _ = seminaive(
+            "multi_source_bfs", seeds, expand, DataFrame.unionByName,
+            max_rounds=max_depth + 1,
+        )
         nbrs.unpersist()
     return visited
 

@@ -32,7 +32,10 @@ from linkgraph.superstep import (
     SuperstepLoop,
     fixpoint,
     iteration_conf,
+    lazy_cut,
     pick_partitions,
+    release_cut,
+    seminaive,
 )
 
 
@@ -231,7 +234,8 @@ def _directional_components(
     The reference runs one quadratic BFS per node; distributed we compute
     the full closure once as semi-naive Datalog — pair relation
     ``reach(node, member)`` grown frontier-by-frontier with the new pairs
-    only (Δ join), so each superstep shuffles only undiscovered pairs.
+    only (Δ join, :func:`~linkgraph.superstep.seminaive`, loud past
+    ``max_iter``), so each superstep shuffles only undiscovered pairs.
     Returns ``(name, id, members array<long> sorted, n_members)``.  The
     closure can be quadratic in cluster size — same asymptotics as the
     reference, fine for the sparse DAG-ish graphs it's meant for.
@@ -244,28 +248,23 @@ def _directional_components(
     else:
         step = e.select(F.col("src_id").alias("id"), F.col("dst_id").alias("member"))
     hop = step.select(F.col("id").alias("prev"), F.col("member")).persist()
-    hop.count()
+
+    def grow(frontier: DataFrame, seen: DataFrame) -> DataFrame:
+        return (
+            frontier.alias("f")
+            .join(hop.alias("h"), F.col("f.member") == F.col("h.prev"))
+            .select(F.col("f.id").alias("id"), F.col("h.member").alias("member"))
+            .distinct()
+            .join(seen, ["id", "member"], "left_anti")
+        )
 
     # no self-filter: a node on a cycle (or with a self-loop) is a member of
     # its own in/out component, as in the reference's BFS
-    seen = step.distinct().localCheckpoint()
-    frontier = seen
-    it = 0
     with iteration_conf(graph.spark):
-        while it < max_iter:
-            it += 1
-            grown = (
-                frontier.alias("f")
-                .join(hop.alias("h"), F.col("f.member") == F.col("h.prev"))
-                .select(F.col("f.id").alias("id"), F.col("h.member").alias("member"))
-                .distinct()
-                .join(seen, ["id", "member"], "left_anti")
-                .localCheckpoint()
-            )
-            if grown.limit(1).count() == 0:
-                break
-            seen = seen.unionByName(grown).localCheckpoint()
-            frontier = grown
+        seen, _ = seminaive(
+            f"{direction}_components", step.distinct(), grow,
+            DataFrame.unionByName, max_rounds=max_iter,
+        )
     agg = seen.groupBy("id").agg(
         F.array_sort(F.collect_set("member")).alias("members"),
         F.count("*").alias("n_members"),
@@ -316,55 +315,45 @@ def strongly_connected_components(graph: LinkGraph) -> DataFrame:
     active = ids.select("id").localCheckpoint()
     edges = all_edges.localCheckpoint()
 
+    # the steps read the current peel round's ``edges`` and ``color``
+    def push_min(color: DataFrame) -> DataFrame:
+        return (
+            edges.join(
+                color.select(F.col("id").alias("src_id"), F.col("color").alias("c")),
+                "src_id",
+            )
+            .select(F.col("dst_id").alias("id"), "c")
+            .unionByName(color.select("id", F.col("color").alias("c")))
+            .groupBy("id")
+            .agg(F.min("c").alias("color"))
+        )
+
+    def sweep_back(frontier: DataFrame, member: DataFrame) -> DataFrame:
+        return (
+            edges.join(frontier.select(F.col("id").alias("dst_id"), "scc"), "dst_id")
+            .select(F.col("src_id").alias("id"), "scc")
+            .distinct()
+            .join(color, "id")
+            .filter(F.col("color") == F.col("scc"))
+            .select("id", "scc")
+            .join(member, "id", "left_anti")
+        )
+
     with iteration_conf(spark):
         while active.limit(1).count() > 0:
-            # (1) forward min-id colouring to fixpoint
-            color = active.select("id", F.col("id").alias("color")).localCheckpoint()
-            while True:
-                msgs = (
-                    edges.join(
-                        color.select(
-                            F.col("id").alias("src_id"), F.col("color").alias("c")
-                        ),
-                        "src_id",
-                    )
-                    .select(F.col("dst_id").alias("id"), "c")
-                    .unionByName(color.select("id", F.col("color").alias("c")))
-                )
-                new_color = msgs.groupBy("id").agg(F.min("c").alias("color"))
-                new_color = new_color.localCheckpoint()
-                changed = (
-                    new_color.alias("n")
-                    .join(color.alias("p"), "id")
-                    .filter(F.col("n.color") < F.col("p.color"))
-                    .limit(1)
-                    .count()
-                )
-                color = new_color
-                if changed == 0:
-                    break
+            # (1) forward min-id colouring to fixpoint; colours only
+            # decrease, so the exact colour sum is the witness
+            color, _ = fixpoint(
+                "scc.colour", active.select("id", F.col("id").alias("color")),
+                push_min, F.sum(F.col("color").cast("decimal(38,0)")),
+                max_rounds=sys.maxsize,
+            )
             # (2) backward sweep from roots, constrained to the same colour
-            member = color.filter(F.col("id") == F.col("color")).select(
-                "id", F.col("color").alias("scc")
-            ).localCheckpoint()
-            frontier = member
-            while True:
-                preds = (
-                    edges.join(
-                        frontier.select(F.col("id").alias("dst_id"), "scc"), "dst_id"
-                    )
-                    .select(F.col("src_id").alias("id"), "scc")
-                    .distinct()
-                    .join(color, "id")
-                    .filter(F.col("color") == F.col("scc"))
-                    .select("id", "scc")
-                    .join(member, "id", "left_anti")
-                    .localCheckpoint()
-                )
-                if preds.limit(1).count() == 0:
-                    break
-                member = member.unionByName(preds).localCheckpoint()
-                frontier = preds
+            roots = color.filter(F.col("id") == F.col("color"))
+            member, _ = seminaive(
+                "scc.sweep", roots.select("id", F.col("color").alias("scc")),
+                sweep_back, DataFrame.unionByName, max_rounds=sys.maxsize,
+            )
             # (3) peel the found SCCs and iterate on the remainder
             assigned = assigned.unionByName(member).localCheckpoint()
             active = active.join(member, "id", "left_anti").localCheckpoint()
@@ -375,6 +364,8 @@ def strongly_connected_components(graph: LinkGraph) -> DataFrame:
                 .join(active.select(F.col("id").alias("dst_id")), "dst_id", "left_semi")
                 .localCheckpoint()
             )
+            release_cut(color)
+            release_cut(member)
     return ids.join(assigned, "id", "left").select(
         "name", "id", F.coalesce("scc", "id").alias("scc")
     )
@@ -485,24 +476,19 @@ def _reach_from_set(
     column to meet the edges' existing distribution — the edge table
     never re-shuffles, the same one-exchange-per-round discipline as the
     WCC/SCC superstep loops.  Converges when the frontier empties."""
-    reached = seeds.select("id").distinct().localCheckpoint(eager=True)
-    frontier = reached
-    rounds = 0
-    while not frontier.isEmpty():
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError(
-                f"_reach_from_set: not converged after {max_rounds} rounds"
-            )
-        nxt = (
+
+    def expand(frontier: DataFrame, reached: DataFrame) -> DataFrame:
+        return (
             frontier.join(probe_edges, frontier.id == F.col("u"))
             .select(F.col("v").alias("id"))
             .distinct()
             .join(reached, "id", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        reached = reached.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+
+    reached, _ = seminaive(
+        "_reach_from_set", seeds.select("id").distinct(), expand,
+        DataFrame.unionByName, max_rounds=max_rounds,
+    )
     return reached
 
 
@@ -512,7 +498,8 @@ def bowtie_decomposition(graph: LinkGraph, max_rounds: int = 256) -> DataFrame:
     ``(cls, n_nodes)`` over the eight standard classes:
 
     - ``SCC``: the largest strongly connected component (ties broken by
-      the smallest member name, cast to long — engine-independent);
+      the smaller ``scc`` label, i.e. the component holding the smallest
+      node id — engine-independent);
     - ``IN``: nodes that reach the SCC but are not in it;
     - ``OUT``: nodes the SCC reaches, not in it;
     - ``TUBE``: reachable from IN and reaching OUT, bypassing the SCC;
@@ -521,11 +508,11 @@ def bowtie_decomposition(graph: LinkGraph, max_rounds: int = 256) -> DataFrame:
     - ``OTHER``: in the SCC's weak component but none of the above;
     - ``DISCONNECTED``: outside the SCC's weak component.
 
-    All eight rows are always emitted (0 when empty) so the schema and
-    cardinality are fixed.  Cost: one SCC run (Fleischer fw-bw coloring,
-    :func:`strongly_connected_components`) plus five reach-from-set
-    frontier BFS fixpoints.  The slim edge table is hash-partitioned
-    ONCE per probe direction (forward / backward / undirected) and
+    All eight rows are always emitted (0 when empty, also on an empty
+    graph) so the schema and cardinality are fixed.  Cost: one SCC run
+    (Fleischer fw-bw coloring, :func:`strongly_connected_components`) plus
+    five reach-from-set frontier BFS fixpoints.  The slim edge table is
+    hash-partitioned ONCE per probe direction (forward / backward / undirected) and
     reused across every fixpoint and round, so each round exchanges only
     the frontier id column — the decomposition scales exactly like
     WCC/SCC; nothing in the plan is proportional to |V|^2 (the closure
@@ -556,16 +543,8 @@ def bowtie_decomposition(graph: LinkGraph, max_rounds: int = 256) -> DataFrame:
     und_e = fwd_e.unionByName(bwd_e).repartition(P, "u").persist()
     edges.unpersist()
     scc = strongly_connected_components(graph)
-    largest = (
-        scc.groupBy("scc")
-        .agg(
-            F.count("*").alias("n"),
-            F.min(F.col("name").cast("long")).alias("min_name"),
-        )
-        .orderBy(F.desc("n"), F.asc("min_name"))
-        .limit(1)
-        .collect()[0]["scc"]
-    )
+    top = scc.groupBy("scc").count().orderBy(F.desc("count"), "scc").limit(1).collect()
+    largest = top[0]["scc"] if top else None  # None: empty graph, every class empty
     core = (
         scc.filter(F.col("scc") == F.lit(largest))
         .select("id")
@@ -577,19 +556,16 @@ def bowtie_decomposition(graph: LinkGraph, max_rounds: int = 256) -> DataFrame:
     out_ = fwd.join(core, "id", "left_anti").localCheckpoint(eager=True)
     in_ = bwd.join(core, "id", "left_anti").localCheckpoint(eager=True)
     disconnected = ids.join(weak, "id", "left_anti")
-    t = (
+    t, (n_t,) = lazy_cut(
         weak.join(core, "id", "left_anti")
         .join(in_, "id", "left_anti")
-        .join(out_, "id", "left_anti")
-        .localCheckpoint(eager=True)
+        .join(out_, "id", "left_anti"),
+        F.count(F.lit(1)),
     )
-    if t.isEmpty():
-        # no tendril candidates — skip the two remaining BFS fixpoints
-        # (the common case on dense graphs where the weak component is
-        # exactly SCC + IN + OUT)
-        empty = t
-        from_in = to_out = empty
-    else:
+    # no tendril candidates (the common case on dense graphs, where the weak
+    # component is exactly SCC + IN + OUT): skip the two remaining BFS runs
+    from_in = to_out = t
+    if n_t:
         from_in = t.join(_reach_from_set(in_, fwd_e, max_rounds), "id")
         to_out = t.join(_reach_from_set(out_, bwd_e, max_rounds), "id")
     tube = from_in.join(to_out, "id")

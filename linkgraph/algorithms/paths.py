@@ -36,7 +36,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph
-from linkgraph.superstep import fixpoint, iteration_conf, pick_partitions
+from linkgraph.superstep import (
+    fixpoint, iteration_conf, lazy_cut, mark_cut, pick_partitions, release_cut,
+    replace_by_id, rounds, seminaive,
+)
 
 
 def single_source_shortest_path(
@@ -56,35 +59,31 @@ def single_source_shortest_path(
               "nbr_id")
         .persist()
     )
-    adj.count()
 
-    settled = (
-        ids.filter(F.col("name") == source)
-        .select("id", F.lit(0).alias("distance"), F.array(F.lit(source)).alias("path"))
-        .localCheckpoint()
+    source_row = ids.filter(F.col("name") == source).select(
+        "id", F.lit(0).alias("distance"), F.array(F.lit(source)).alias("path")
     )
-    frontier = settled
-    max_level = cutoff if cutoff is not None else sys.maxsize
-    level = 0
+
+    def expand(frontier: DataFrame, settled: DataFrame) -> DataFrame:
+        if cutoff is not None:
+            frontier = frontier.filter(F.col("distance") < cutoff)
+        return (
+            frontier.join(adj, "id")
+            .select(
+                F.col("nbr_id").alias("id"),
+                (F.col("distance") + 1).alias("distance"),
+                F.concat("path", F.array("nbr_name")).alias("path"),
+            )
+            .join(settled.select("id"), "id", "left_anti")
+            .groupBy("id", "distance")
+            .agg(F.min("path").alias("path"))
+        )
+
     with iteration_conf(spark):
-        while level < max_level:
-            level += 1
-            cand = (
-                frontier.join(adj, "id")
-                .select(
-                    F.col("nbr_id").alias("id"),
-                    F.concat("path", F.array("nbr_name")).alias("path"),
-                )
-                .join(settled.select("id"), "id", "left_anti")
-            )
-            new = cand.groupBy("id").agg(
-                F.lit(level).alias("distance"), F.min("path").alias("path")
-            )
-            new = new.localCheckpoint()
-            if new.limit(1).count() == 0:
-                break
-            settled = settled.unionByName(new).localCheckpoint()
-            frontier = new
+        settled, _ = seminaive(
+            "single_source_shortest_path", source_row, expand,
+            DataFrame.unionByName, max_rounds=sys.maxsize,
+        )
     return settled.join(ids, "id").select("name", "id", "distance", "path")
 
 
@@ -97,7 +96,8 @@ def dijkstra_single_source_shortest_paths(
 ) -> DataFrame:
     """Weighted shortest paths over out-edges; returns
     ``(name, id, cost, path array<string>)`` for ``targets`` (all reachable
-    nodes when ``targets`` is None)."""
+    nodes when ``targets`` is None).  Raises ``RuntimeError`` if the
+    relaxation still improves after ``max_iter`` rounds."""
     spark = graph.spark
     source = str(source)
     if not graph.has_node(source):
@@ -122,49 +122,40 @@ def dijkstra_single_source_shortest_paths(
         .filter(F.col("w").isNotNull())
         .persist()
     )
-    w.count()
 
-    state = (
-        ids.filter(F.col("name") == source)
-        .select("id", F.lit(0.0).alias("cost"), F.array(F.lit(source)).alias("path"))
-        .localCheckpoint()
+    source_row = ids.filter(F.col("name") == source).select(
+        "id", F.lit(0.0).alias("cost"), F.array(F.lit(source)).alias("path")
     )
-    frontier = state
-    it = 0
-    with iteration_conf(spark):
-        while it < max_iter:
-            it += 1
-            relax = frontier.join(w, "id").select(
-                F.col("nbr_id").alias("id"),
-                (F.col("cost") + F.col("w")).alias("cost"),
-                F.concat("path", F.array("nbr_name")).alias("path"),
-            )
-            best = relax.groupBy("id").agg(
-                F.min(F.struct("cost", "path")).alias("s")
-            ).select("id", F.col("s.cost").alias("cost"), F.col("s.path").alias("path"))
-            # keep only strict improvements over current state
-            improved = (
-                best.alias("b")
-                .join(state.alias("s"), "id", "left")
-                .filter(
-                    F.col("s.cost").isNull()
-                    | (F.col("b.cost") < F.col("s.cost"))
-                    | (
-                        (F.col("b.cost") == F.col("s.cost"))
-                        & (F.col("b.path") < F.col("s.path"))
-                    )
+
+    def relax(frontier: DataFrame, state: DataFrame) -> DataFrame:
+        relaxed = frontier.join(w, "id").select(
+            F.col("nbr_id").alias("id"),
+            (F.col("cost") + F.col("w")).alias("cost"),
+            F.concat("path", F.array("nbr_name")).alias("path"),
+        )
+        best = relaxed.groupBy("id").agg(
+            F.min(F.struct("cost", "path")).alias("s")
+        ).select("id", F.col("s.cost").alias("cost"), F.col("s.path").alias("path"))
+        # keep only strict improvements over the current state
+        return (
+            best.alias("b")
+            .join(state.alias("s"), "id", "left")
+            .filter(
+                F.col("s.cost").isNull()
+                | (F.col("b.cost") < F.col("s.cost"))
+                | (
+                    (F.col("b.cost") == F.col("s.cost"))
+                    & (F.col("b.path") < F.col("s.path"))
                 )
-                .select("id", F.col("b.cost").alias("cost"), F.col("b.path").alias("path"))
-                .localCheckpoint()
             )
-            if improved.limit(1).count() == 0:
-                break
-            state = (
-                state.join(improved.select("id"), "id", "left_anti")
-                .unionByName(improved)
-                .localCheckpoint()
-            )
-            frontier = improved
+            .select("id", F.col("b.cost").alias("cost"), F.col("b.path").alias("path"))
+        )
+
+    with iteration_conf(spark):
+        state, _ = seminaive(
+            "dijkstra_single_source_shortest_paths", source_row, relax,
+            replace_by_id, max_rounds=max_iter,
+        )
     out = state.join(ids, "id").select("name", "id", "cost", "path")
     if targets is not None:
         out = out.filter(F.col("name").isin([str(t) for t in targets]))
@@ -176,7 +167,6 @@ def widest_paths(
     source: str,
     weight: str,
     max_iter: int = 64,
-    iters_out: dict | None = None,
 ) -> DataFrame:
     """Max-min bottleneck ("widest path") capacities from ``source`` —
     ``(name, id, capacity)`` for every OTHER reachable node.
@@ -232,47 +222,33 @@ def widest_paths(
     src_id = ids.filter(F.col("name") == source).select("id")
     # first hop: capacity(v) = cap(source, v); the source itself carries
     # conceptual capacity +inf and never re-enters the state
-    state = (
+    first_hop = (
         adj.join(src_id, "id")
         .groupBy(F.col("nbr_id").alias("id"))
         .agg(F.max("w").alias("capacity"))
-        .localCheckpoint()
     )
-    frontier = state
-    it = 0
+
+    def relax(frontier: DataFrame, state: DataFrame) -> DataFrame:
+        widened = (
+            frontier.join(adj, "id")
+            .join(src_id.select(F.col("id").alias("nbr_id")), "nbr_id", "left_anti")
+            .groupBy(F.col("nbr_id").alias("id"))
+            .agg(F.max(F.least("capacity", "w")).alias("capacity"))
+        )
+        return (
+            widened.alias("r")
+            .join(state.alias("s"), "id", "left")
+            .filter(
+                F.col("s.capacity").isNull()
+                | (F.col("r.capacity") > F.col("s.capacity"))
+            )
+            .select("id", F.col("r.capacity").alias("capacity"))
+        )
+
     with iteration_conf(spark, shuffle_partitions=n_part):
-        while it < max_iter:
-            it += 1
-            relax = (
-                frontier.join(adj, "id")
-                .join(src_id.select(F.col("id").alias("nbr_id")), "nbr_id", "left_anti")
-                .groupBy(F.col("nbr_id").alias("id"))
-                .agg(F.max(F.least("capacity", "w")).alias("capacity"))
-            )
-            improved = (
-                relax.alias("r")
-                .join(state.alias("s"), "id", "left")
-                .filter(
-                    F.col("s.capacity").isNull()
-                    | (F.col("r.capacity") > F.col("s.capacity"))
-                )
-                .select("id", F.col("r.capacity").alias("capacity"))
-                .localCheckpoint()
-            )
-            if improved.limit(1).count() == 0:
-                break
-            state = (
-                state.join(improved.select("id"), "id", "left_anti")
-                .unionByName(improved)
-                .localCheckpoint()
-            )
-            frontier = improved
-        else:
-            raise RuntimeError(
-                f"widest_paths did not converge in {max_iter} rounds"
-            )
-    if iters_out is not None:
-        iters_out["iterations"] = it
+        state, _ = seminaive(
+            "widest_paths", first_hop, relax, replace_by_id, max_rounds=max_iter
+        )
     return state.join(ids, "id").select("name", "id", "capacity")
 
 
@@ -605,8 +581,9 @@ def fastest_path_durations(
     minutes and seconds once most of the Pareto surface has stabilised.
 
     Convergence: the frontier (anti-join of the pruned merge against
-    the previous state) empties exactly at the fixpoint — one isEmpty
-    action per round, with a loud ``max_rounds`` guard.
+    the previous state) empties exactly at the fixpoint — one Spark job
+    per round stores the pruned state and counts the frontier, with a
+    loud ``max_rounds`` guard.
 
     **Hub-source guard**: per-source cost scales with the source's
     *departure multiplicity* — round 0 seeds one Pareto label per
@@ -682,7 +659,6 @@ def fastest_path_durations(
                 F.col("t").alias("arrival"),
             )
             .distinct()
-            .localCheckpoint(eager=True)
         )
         cmp_op = (lambda t, a: t > a) if strict else (lambda t, a: t >= a)
         # dominance prune: keep a label iff no strictly-later departure
@@ -692,15 +668,8 @@ def fastest_path_durations(
             .orderBy(F.desc("dep"))
             .rowsBetween(Window.unboundedPreceding, -1)
         )
-        frontier = state
-        rounds = 0
-        while True:
-            rounds += 1
-            if rounds > max_rounds:
-                raise RuntimeError(
-                    f"fastest_path_durations: not converged after "
-                    f"{max_rounds} rounds — raise max_rounds"
-                )
+        frontier = state = mark_cut(state)
+        for _ in rounds("fastest_path_durations", max_rounds):
             cand = (
                 frontier.join(ev, frontier.node == ev.u)
                 .filter(cmp_op(F.col("t"), F.col("arrival")))
@@ -715,17 +684,20 @@ def fastest_path_durations(
                 .groupBy("source", "node", "dep")
                 .agg(F.min("arrival").alias("arrival"))
             )
-            new_state = (
+            new_state = mark_cut(
                 merged.withColumn("sm", F.min("arrival").over(w))
                 .filter(F.col("sm").isNull() | (F.col("arrival") < F.col("sm")))
                 .drop("sm")
-                .localCheckpoint(eager=True)
             )
-            frontier = new_state.join(
-                state, ["source", "node", "dep", "arrival"], "left_anti"
-            ).localCheckpoint(eager=True)
-            state = new_state
-            if frontier.isEmpty():
+            # one job stores the pruned state and cuts + counts the changes
+            new_frontier, (changed,) = lazy_cut(
+                new_state.join(state, ["source", "node", "dep", "arrival"], "left_anti"),
+                F.count(F.lit(1)),
+            )
+            release_cut(frontier)
+            release_cut(state)
+            state, frontier = new_state, new_frontier
+            if changed == 0:
                 break
         ev.unpersist()
         out = (

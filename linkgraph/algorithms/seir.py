@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph, name_to_id
-from linkgraph.superstep import iteration_conf
+from linkgraph.superstep import iteration_conf, replace_by_id, rounds, seminaive
 
 I64_MAX = (1 << 63) - 1
 _MASK53 = (1 << 53) - 1
@@ -84,7 +84,8 @@ def temporal_seir(
     deterministic hash-ordered sample of n nodes (``Number``, :105-124), or
     ``float p`` = each node seeded with probability p (``Probability``,
     :92-103).  ``recovery_rate=None`` → SI (never recover);
-    ``incubation_rate=None`` → incubation 1 (:205-210).
+    ``incubation_rate=None`` → incubation 1 (:205-210).  ``max_iter``
+    bounds the supersteps; a run that needs more raises ``RuntimeError``.
     """
     if not 0.0 <= infection_prob <= 1.0:
         raise ValueError(f"Invalid probability {infection_prob}")
@@ -149,18 +150,15 @@ def temporal_seir(
         )
         .persist()
     )
-    events.count()
 
     t0 = int(initial_infection)
     state = seed_df.select("id", F.lit(t0).cast("long").alias("infected"))
-    state = state.localCheckpoint()
-    frontier = state
 
     with iteration_conf(spark):
         if recovery_rate is None:
-            state = _si_relaxation(state, frontier, delays, events, max_iter)
+            state = _si_relaxation(state, delays, events, max_iter)
         else:
-            state = _dijkstra_levels(state, delays, events, max_iter)
+            state = _dijkstra_levels(state.localCheckpoint(), delays, events, max_iter)
 
     events.unpersist()
     return (
@@ -194,14 +192,13 @@ def _send_windows(frontier, delays):
     )
 
 
-def _si_relaxation(state, frontier, delays, events, max_iter):
+def _si_relaxation(seeds, delays, events, max_iter):
     """No recovery (SI): windows ``[infected+incub, ∞)`` only GROW when an
     infection time improves, so the earliest-infection operator is monotone
     and plain frontier relaxation converges to the least fixpoint = the DES
     outcome.  Supersteps = longest improving hop chain."""
-    it = 0
-    while it < max_iter:
-        it += 1
+
+    def relax(frontier, state):
         cand = (
             _send_windows(frontier, delays)
             .join(events, "src_id")
@@ -209,21 +206,15 @@ def _si_relaxation(state, frontier, delays, events, max_iter):
             .groupBy(F.col("dst_id").alias("id"))
             .agg(F.min("time").alias("cand"))
         )
-        improved = (
+        return (
             cand.join(state, "id", "left")
             .filter(F.col("infected").isNull() | (F.col("cand") < F.col("infected")))
             .select("id", F.col("cand").alias("infected"))
-            .localCheckpoint()
         )
-        if improved.limit(1).count() == 0:
-            break
-        state = (
-            state.unionByName(improved)
-            .groupBy("id")
-            .agg(F.min("infected").alias("infected"))
-            .localCheckpoint()
-        )
-        frontier = improved
+
+    state, _ = seminaive(
+        "temporal_seir", seeds, relax, replace_by_id, max_rounds=max_iter
+    )
     return state
 
 
@@ -240,9 +231,7 @@ def _dijkstra_levels(state, delays, events, max_iter):
     delta = incubation)."""
     frontier = state  # seeds are final: t0 is the global minimum time
     cands = None  # pending tentative candidates (id, cand, incub)
-    it = 0
-    while it < max_iter:
-        it += 1
+    for _ in rounds("temporal_seir", max_iter):
         new = (
             _send_windows(frontier, delays)
             .join(events, "src_id")

@@ -939,6 +939,10 @@ def pq_codes(
     exactly once; nothing is quadratic in the corpus.
     """
     dim_row = embeddings.select(F.size(vec_col).alias("d")).limit(1).first()
+    if dim_row is None:
+        return embeddings.sparkSession.createDataFrame(
+            [], "vec_id long, subspace int, code long, dist6 double"
+        )
     dim = int(dim_row["d"])
     if dim % int(m) != 0:
         raise ValueError(f"pq_codes: dim {dim} not divisible by m={m}")

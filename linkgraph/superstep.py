@@ -23,20 +23,24 @@ classpath (``df.writeTo(table)``); this sandbox image has no Iceberg jars,
 so the same layout is written as parquet snapshot directories — identical
 interface, per-snapshot atomic commit via the lineage append.
 
-Two drivers run the loops:
+Three drivers run the loops:
 
 - :func:`fixpoint` — for loops whose state has converged when a one-row
   aggregate of it (the *witness*) stops changing: ``kcore`` (k-core peel,
   k-truss peel, coreness, truss decomposition), ``structure.dag_path_counts``,
-  ``paths.earliest_arrival_times`` / ``latest_departure_times`` and the
+  ``paths.earliest_arrival_times`` / ``latest_departure_times``, the forward
+  min-id colouring of ``components.strongly_connected_components``, and the
   min-label hook + pointer-jump merge ``components.min_label_merge`` (the
   superstep kernel of ``community.triangle_communities`` and the per-round
   merge of ``mst.minimum_spanning_forest``).  Each round is ONE Spark job: a
   lazy ``localCheckpoint`` whose first consumer is the witness aggregate, so
   the job computes, stores and measures the round; the superseded round is
   freed once the next is stored (:func:`release_cut`).
-  ``kcore.onion_layers`` stops on an empty alive set instead, so it keeps its
-  own loop but takes the same cut (:func:`lazy_cut`) and release.
+- :func:`seminaive` — for loops that grow their state until a round's
+  delta is empty: ``paths`` BFS, Dijkstra and widest paths; in/out
+  components, the SCC backward sweep and the bow-tie reach-from-set runs;
+  ``centrality.multi_source_bfs``; SI infection in ``seir``.  ONE Spark job
+  per round cuts and counts the delta and stores the merged state.
 - :class:`SuperstepLoop` — for pagerank, hits, the centrality power
   iterations and weakly connected components.  They measure each round
   against the PREVIOUS state (a delta or changed-row join), so both
@@ -44,6 +48,10 @@ Two drivers run the loops:
   :class:`CheckpointStore` and resume from it.  Each round persists the
   state, measures it, and cuts lineage eagerly at commit — two jobs per
   round.
+
+Other loops fit no driver (README "Execution model" says why) and keep
+their own; ``fastest_path_durations`` and ``onion_layers`` take the same
+cut (:func:`mark_cut`, :func:`lazy_cut`) and release.
 """
 
 from __future__ import annotations
@@ -344,16 +352,16 @@ def lazy_cut(df: DataFrame, *aggs: Column) -> tuple[DataFrame, Row]:
     ``localCheckpoint(eager=False)`` only marks the frame; the one-row
     ``aggs`` aggregate is its first consumer, so that job computes the
     frame, stores its blocks and returns the aggregate row.  Every later
-    reader starts from the stored blocks, and the cut does not inherit the
-    size estimate of the plan it cut (:func:`_without_origin_stats`).
+    reader starts from the stored blocks (:func:`mark_cut`).
     """
-    df = _without_origin_stats(df.localCheckpoint(eager=False))
+    df = mark_cut(df)
     return df, df.agg(*aggs).first()
 
 
-def _without_origin_stats(cut: DataFrame) -> DataFrame:
-    """``cut`` (a local checkpoint) with the plan statistics it inherits
-    from the plan it cut dropped; Spark then sizes it at
+def mark_cut(df: DataFrame) -> DataFrame:
+    """``df`` cut by a local checkpoint that the first job reading it
+    computes and stores, without the plan statistics the cut would inherit
+    from the plan it cut; Spark then sizes it at
     ``spark.sql.defaultSizeInBytes``, like any RDD-backed frame.
 
     Spark sizes a join as the PRODUCT of its sides, and a checkpoint keeps
@@ -363,6 +371,7 @@ def _without_origin_stats(cut: DataFrame) -> DataFrame:
     round and, a dozen to twenty rounds in, planning one round takes minutes
     of BigInteger arithmetic.  The partitioning and the stored blocks are kept.
     """
+    cut = df.localCheckpoint(eager=False)
     spark = cut.sparkSession
     jvm = spark._jvm
     lp = cut._jdf.queryExecution().logical()
@@ -405,11 +414,11 @@ def fixpoint(
     round is released as soon as the next one is stored.  Returns the
     final state and the number of rounds run; the round whose witness
     equals the previous one is the last.  Raises ``RuntimeError`` if
-    ``max_rounds`` rounds do not converge, and logs one DEBUG record per
+    ``max_rounds`` rounds do not converge (:func:`rounds`), and logs one DEBUG record per
     round to the ``linkgraph.superstep`` logger.
     """
     state, prev = lazy_cut(state, *witness)
-    for rnd in range(1, max_rounds + 1):
+    for rnd in rounds(name, max_rounds):
         t0 = _time.monotonic()
         old = state
         state, cur = lazy_cut(step(state), *witness)
@@ -421,6 +430,62 @@ def fixpoint(
         if cur == prev:
             return state, rnd
         prev = cur
-    raise RuntimeError(
-        f"{name}: not converged after {max_rounds} rounds — raise max_rounds"
-    )
+
+
+def rounds(name: str, max_rounds: int):
+    """Rounds 1..``max_rounds`` of a loop that leaves when it converges;
+    asking for one more raises the loud ``not converged`` guard."""
+    yield from range(1, max_rounds + 1)
+    raise RuntimeError(f"{name}: not converged after {max_rounds} rounds — raise max_rounds")
+
+
+def seminaive(
+    name: str,
+    state: DataFrame,
+    step: Callable[[DataFrame, DataFrame], DataFrame],
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+    *,
+    max_rounds: int,
+) -> tuple[DataFrame, int]:
+    """Grow ``state`` delta by delta until a round derives nothing new.
+
+    The initial ``state`` is also the first delta.  ``step(delta, state)``
+    returns the rows new to (or better than) ``state``, reading ``state``;
+    ``merge(state, delta)`` folds them in (``DataFrame.unionByName``, or
+    :func:`replace_by_id`).  ONE Spark job per round cuts and counts the
+    delta and stores the state merged the round before, whose inputs are
+    then freed.  Returns the final state and the rounds run, the empty one
+    included; raises ``RuntimeError`` after ``max_rounds`` non-empty rounds;
+    logs one DEBUG record per round (name, round, delta rows, wall).
+    """
+    # a job storing a cut also stores + cuts each marked frame it read, whole:
+    # merged states are complete before their inputs are freed, lineage short
+    sc, key = state.sparkSession.sparkContext, "spark.checkpoint.checkpointAllMarkedAncestors"
+    prior = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, "true")
+    try:
+        state, _ = lazy_cut(state, F.count(F.lit(1)))
+        delta, stale = state, ()
+        for rnd in rounds(name, max_rounds):
+            t0 = _time.monotonic()
+            new, (rows,) = lazy_cut(step(delta, state), F.count(F.lit(1)))
+            for old in stale:  # that job stored ``state``, merged from these
+                release_cut(old)
+            _log.debug(
+                "%s round=%d delta_rows=%d wall_s=%.3f",
+                name, rnd, rows, _time.monotonic() - t0,
+            )
+            if rows == 0:
+                release_cut(new)
+                return state, rnd
+            stale, delta = (state, new), new
+            state = mark_cut(merge(state, new))
+    finally:
+        sc.setLocalProperty(key, prior)
+
+
+def replace_by_id(state: DataFrame, delta: DataFrame) -> DataFrame:
+    """``state`` with each row whose ``id`` is in ``delta`` replaced by the
+    delta's row — the :func:`seminaive` merge of a relaxation whose delta
+    holds only improved rows (Dijkstra, widest paths, SI infection)."""
+    return state.join(delta.select("id"), "id", "left_anti").unionByName(delta)

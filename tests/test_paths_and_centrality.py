@@ -264,10 +264,12 @@ def test_salsa_closed_form_two_components(spark):
         assert abs(sum(r["score"] for r in side.values()) - 1.0) < 1e-5
 
 
-def test_widest_paths_prefers_long_wide_route(spark):
+def test_widest_paths_prefers_long_wide_route(spark, caplog):
     """Max-min semiring: A->B->C (bottleneck 10) beats the direct A->C
     (capacity 3); D is wider still via the 3-hop route; the source is
     excluded; unreachable Z is absent. Hand-computed fixpoint."""
+    import logging
+
     from linkgraph.algorithms.paths import widest_paths
 
     caps = [
@@ -279,13 +281,18 @@ def test_widest_paths_prefers_long_wide_route(spark):
         "src string, dst string, time long, layer string, weight double",
     )
     g = LinkGraph(edges_t)
-    io = {}
+    caplog.set_level(logging.DEBUG, logger="linkgraph.superstep")
     res = {
         r["name"]: r["capacity"]
-        for r in widest_paths(g, "A", "weight", iters_out=io).collect()
+        for r in widest_paths(g, "A", "weight").collect()
     }
     assert res == {"B": 10, "C": 10, "D": 9}
-    assert io["iterations"] >= 2  # the wide route needs >1 relaxation round
+    rounds = [
+        r.args[1]
+        for r in caplog.records
+        if r.name == "linkgraph.superstep" and r.args[0] == "widest_paths"
+    ]
+    assert rounds[-1] >= 2  # the wide route needs >1 relaxation round
 
 
 def test_widest_paths_sums_parallel_events(spark):

@@ -30,8 +30,8 @@ def test_bowtie_textbook(spark):
 
 
 def test_bowtie_largest_scc_tiebreak(spark):
-    """Two SCCs of equal size: the one with the smaller member name (cast
-    to long) must be chosen — engine-independent determinism."""
+    """Two SCCs of equal size: the one with the smaller ``scc`` label (its
+    smallest node id) must be chosen — engine-independent determinism."""
     from linkgraph.algorithms import bowtie_decomposition
     from linkgraph.graph import LinkGraph
 
@@ -44,6 +44,48 @@ def test_bowtie_largest_scc_tiebreak(spark):
     got = {r["cls"]: r["n_nodes"] for r in bowtie_decomposition(g).collect()}
     # A (min name 5) is the core; B is fully reachable from it -> OUT
     assert got["SCC"] == 2 and got["OUT"] == 2 and got["IN"] == 0
+
+
+def test_bowtie_empty_graph_is_all_zero(spark):
+    from linkgraph.algorithms import bowtie_decomposition
+    from linkgraph.graph import LinkGraph
+
+    got = {
+        r["cls"]: r["n_nodes"]
+        for r in bowtie_decomposition(LinkGraph.from_edge_list(spark, [])).collect()
+    }
+    assert got == {
+        "SCC": 0, "IN": 0, "OUT": 0, "TUBE": 0, "TENDRIL_IN": 0,
+        "TENDRIL_OUT": 0, "OTHER": 0, "DISCONNECTED": 0,
+    }
+
+
+def test_bowtie_non_numeric_names(spark):
+    """Names that are not decimal integers (repository names, say) hash to
+    their ids; the tie-break must not cast them."""
+    from linkgraph.algorithms import bowtie_decomposition
+    from linkgraph.graph import LinkGraph
+
+    got = {
+        r["cls"]: r["n_nodes"]
+        for r in bowtie_decomposition(
+            LinkGraph.from_edge_list(spark, [(1, "a", "a")])
+        ).collect()
+    }
+    # the self-loop is dropped: one singleton SCC, nothing else
+    assert got["SCC"] == 1 and sum(got.values()) == 1
+
+    ev = [
+        (0, "org/x", "org/y"), (1, "org/y", "org/x"),   # SCC {x, y}
+        (2, "org/in", "org/x"),                         # IN
+        (3, "org/y", "org/out"),                        # OUT
+    ]
+    got = {
+        r["cls"]: r["n_nodes"]
+        for r in bowtie_decomposition(LinkGraph.from_edge_list(spark, ev)).collect()
+    }
+    assert (got["SCC"], got["IN"], got["OUT"]) == (2, 1, 1)
+    assert sum(got.values()) == 4
 
 
 def test_paragraph_dedup_keep_first(spark):
@@ -97,6 +139,12 @@ def test_pq_codes_hand(spark):
 
     with pytest.raises(ValueError, match="not divisible"):
         pq_codes(emb, m=3)
+
+    empty = pq_codes(emb.limit(0), m=2, codebook_size=2)
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == (
+        "struct<vec_id:bigint,subspace:int,code:bigint,dist6:double>"
+    )
 
 
 def test_last_touch_attribution_hand(spark):

@@ -1,20 +1,25 @@
-"""``superstep.fixpoint`` on a toy frame: the stop rule, the loud guard,
-one Spark job per round, one DEBUG record per round, superseded rounds
-released.
+"""``superstep.fixpoint`` and ``superstep.seminaive`` on toy frames: the
+stop rule, the loud guard, one Spark job per round, one DEBUG record per
+round, superseded rounds released.
 
-The toy state halves every value each round (``v -> max(v) div 2`` per
-id, a shuffle per round), so ``sum(v)`` runs 800, 400, 200, 96, 48, 24,
-8, 0, 0 and the witness first repeats in round 8.
+The fixpoint toy state halves every value each round (``v -> max(v) div
+2`` per id, a shuffle per round), so ``sum(v)`` runs 800, 400, 200, 96,
+48, 24, 8, 0, 0 and the witness first repeats in round 8.
+
+The seminaive toy is a BFS from node 0 along the path 0 -> 1 -> ... -> 7:
+round ``r`` reaches node ``r``, and round 8 reaches nothing.
 """
 
 import logging
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.superstep import fixpoint, iteration_conf
+from linkgraph.superstep import fixpoint, iteration_conf, seminaive
 
 ROUNDS = 8
+PATH_ROUNDS = 8
 
 
 def _start(spark):
@@ -95,3 +100,81 @@ def test_fixpoint_cut_does_not_inherit_the_plan_size(spark):
     assert rounds == 14
     size = state._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     assert size.bit_length() <= 64
+
+
+def _bfs(spark, max_rounds=64):
+    path = spark.range(PATH_ROUNDS - 1).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )
+
+    def expand(frontier, reached):
+        return (
+            frontier.join(path, frontier.id == path.src)
+            .select(F.col("dst").alias("id"), (F.col("d") + 1).alias("d"))
+            .join(reached, "id", "left_anti")
+        )
+
+    start = spark.range(1).select("id", F.lit(0).cast("long").alias("d"))
+    return seminaive(
+        "bfs", start, expand, DataFrame.unionByName, max_rounds=max_rounds
+    )
+
+
+def test_seminaive_stops_on_empty_delta(spark):
+    state, rounds = _bfs(spark)
+    assert rounds == PATH_ROUNDS
+    assert sorted((r["id"], r["d"]) for r in state.collect()) == [
+        (i, i) for i in range(PATH_ROUNDS)
+    ]
+
+
+def test_seminaive_raises_at_max_rounds(spark):
+    with pytest.raises(RuntimeError, match="bfs: not converged after 3 rounds"):
+        _bfs(spark, max_rounds=3)
+    # the round that derives nothing may be the last one allowed
+    _, rounds = _bfs(spark, max_rounds=PATH_ROUNDS)
+    assert rounds == PATH_ROUNDS
+
+
+def test_seminaive_runs_one_job_per_round(spark):
+    sc = spark.sparkContext
+    group = "test-seminaive-jobs"
+    with iteration_conf(spark, shuffle_partitions=4):
+        sc.setJobGroup(group, group)
+        try:
+            _, rounds = _bfs(spark)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    # one job cuts and counts the initial state, then one per round
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == rounds + 1
+
+
+def test_seminaive_releases_superseded_rounds(spark):
+    # every delta and every merged state is a local checkpoint; only the
+    # returned state stays stored
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    state, rounds = _bfs(spark)
+    assert rounds == PATH_ROUNDS
+    assert persistent().size() - before <= 1
+    assert state.count() == PATH_ROUNDS
+
+
+def test_seminaive_logs_one_debug_record_per_round(spark, caplog):
+    caplog.set_level(logging.DEBUG, logger="linkgraph.superstep")
+    _, rounds = _bfs(spark)
+    records = [r for r in caplog.records if r.name == "linkgraph.superstep"]
+    assert [r.levelno for r in records] == [logging.DEBUG] * rounds
+    assert [r.args[:3] for r in records] == [("bfs", i, 1) for i in range(1, rounds)] + [
+        ("bfs", rounds, 0)
+    ]
+
+
+def test_seminaive_cuts_the_merged_state(spark):
+    # the job that counts a delta also cuts the state merged before it, so
+    # the returned state's RDD lineage does not chain every round's union
+    with iteration_conf(spark, shuffle_partitions=4):
+        state, rounds = _bfs(spark)
+    assert rounds == PATH_ROUNDS
+    assert state._jdf.queryExecution().logical().rdd().isCheckpointed()
