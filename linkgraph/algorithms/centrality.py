@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph, persist_once
-from linkgraph.superstep import SuperstepLoop, iteration_conf, pick_partitions, seminaive
+from linkgraph.superstep import iteration_conf, pick_partitions, seminaive, supersteps
 
 
 def _message_edges(graph: LinkGraph, direction: str) -> DataFrame:
@@ -82,23 +82,23 @@ def _linear_push_loop(
         msgs.count()
         raw.unpersist()
 
-        init = graph.ids().select(
-            "id", F.lit(float(init_score)).alias("score")
-        ).repartition(P, "id")
-        loop = SuperstepLoop(spark)
-        state, start_it = loop.begin(init)
-        for it in range(start_it, max_iter + 1):
-            recv = (
+        def push(state: DataFrame, _row) -> DataFrame:
+            return (
                 msgs.join(state.select(F.col("id").alias("from_id"), "score"), "from_id")
                 .groupBy(F.col("to_id").alias("id"))
                 .agg(F.sum(F.col("w") * F.col("score")).alias("recv"))
                 .select("id", combine(F.col("recv")).alias("score"))
             )
-            recv = loop.stage(recv, it)
-            state = loop.commit(it)
-        out = state.select("id", "score")
-        # detach the result from the loop's cache before it is unpersisted
-        out = out.localCheckpoint(eager=True)
+
+        out = graph.ids().select(
+            "id", F.lit(float(init_score)).alias("score")
+        ).repartition(P, "id")
+        # a fixed number of rounds, no stop rule; the last round is a stored
+        # cut, so it outlives the msgs cache
+        for _, out, _ in supersteps(
+            "linear_push", out, push, F.count(F.lit(1)), rounds=range(1, max_iter + 1)
+        ):
+            pass
         msgs.unpersist()
     return out
 
@@ -190,10 +190,11 @@ def weighted_pagerank(
     (pagerank.rs:104-123) — sinks here are nodes with zero out-strength.
 
     Fixed ``max_iter`` supersteps (deterministic, SQL-replayable).  The
-    sink mass rides the superstep plan as a broadcast one-row aggregate of
-    the SAME cached state — no extra driver action, and no sink×n message
-    blow-up (the SQL oracle at test scale uses the explicit sink→all-nodes
-    arm; the engine never materialises it).
+    sink mass is the one-row witness of each superstep's state, measured by
+    the Spark job that computes it and handed to the next superstep as a
+    literal — one job per superstep, and no sink×n message blow-up (the SQL
+    oracle at test scale uses the explicit sink→all-nodes arm; the engine
+    never materialises it).
 
     ``damping=1.0`` turns the teleport off entirely, making this the
     power iteration of the row-normalised weighted transition matrix with
@@ -246,8 +247,6 @@ def weighted_pagerank(
         )
         .persist()
     )
-    sinks = ids.select("id").join(strength, "id", "left_anti").persist()
-    sinks.count()
 
     P = partitions or pick_partitions(spark, wmsgs.count())
     d = float(damping)
@@ -257,33 +256,42 @@ def weighted_pagerank(
         wmsgs.count()
         raw.unpersist()
 
-        init = ids.select("id", F.lit(1.0 / n).alias("score")).repartition(P, "id")
-        loop = SuperstepLoop(spark)
-        state, start_it = loop.begin(init)
-        for it in range(start_it, max_iter + 1):
-            sink_mass = state.join(F.broadcast(sinks), "id", "left_semi").agg(
-                F.coalesce(F.sum("score"), F.lit(0.0)).alias("sm")
-            )
+        def step(state: DataFrame, row) -> DataFrame:
+            # the state joins what it received (every node sends itself a
+            # zero-weight message) and keeps its sink flag; ``row`` holds the
+            # sink mass of the state it reads
             recv = (
                 wmsgs.join(
                     state.select(F.col("id").alias("from_id"), "score"), "from_id"
                 )
                 .groupBy(F.col("to_id").alias("id"))
                 .agg(F.sum(F.col("wt") * F.col("score")).alias("recv"))
-                .crossJoin(F.broadcast(sink_mass))
-                .select(
-                    "id",
-                    (
-                        F.lit((1.0 - d) / n)
-                        + F.lit(d) * (F.col("recv") + F.col("sm") / F.lit(float(n)))
-                    ).alias("score"),
-                )
             )
-            recv = loop.stage(recv, it)
-            state = loop.commit(it)
-        out = state.select("id", "score").localCheckpoint(eager=True)
+            return state.join(recv, "id").select(
+                "id",
+                "sink",
+                (
+                    F.lit((1.0 - d) / n)
+                    + F.lit(d) * (F.col("recv") + F.lit(row["sm"]) / F.lit(float(n)))
+                ).alias("score"),
+            )
+
+        out = (
+            ids.join(strength, "id", "left")
+            .select(
+                "id", F.col("s").isNull().alias("sink"), F.lit(1.0 / n).alias("score")
+            )
+            .repartition(P, "id")
+        )
+        for _, out, _ in supersteps(
+            "weighted_pagerank",
+            out,
+            step,
+            F.coalesce(F.sum(F.when(F.col("sink"), F.col("score"))), F.lit(0.0)).alias("sm"),
+            rounds=range(1, max_iter + 1),
+        ):
+            pass  # a fixed number of rounds, no stop rule
         wmsgs.unpersist()
-        sinks.unpersist()
     res = ids.join(out, "id", "left").select(
         "name", "id", F.coalesce("score", F.lit(0.0)).alias("score")
     )

@@ -11,9 +11,13 @@ Semantics match the reference exactly
   node changes. The component id is therefore the minimum external id in
   the component.
 
-Spark-first execution: the undirected adjacency is hash-partitioned once
-and cached; each superstep is one join + min-aggregate, with the "changed"
-count folded into a single one-row action. Convergence takes O(diameter)
+Spark-first execution: the undirected adjacency, plus a self-message edge
+per node, is hash-partitioned once and cached; each superstep is one join +
+min-aggregate whose self-message also yields the node's previous label as
+``prev_component``, so the "changed" count is a one-row aggregate of the
+new state, taken by the one Spark job that computes and cuts it
+(:func:`linkgraph.superstep.supersteps`; checkpoints keep ``id,
+component``).  Convergence takes O(diameter)
 supersteps — fine for web-scale link graphs (small diameter); a
 large-star/small-star contraction variant is a possible follow-up that
 must preserve min-id labels.
@@ -22,6 +26,7 @@ must preserve min-id labels.
 from __future__ import annotations
 
 import sys
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -29,13 +34,13 @@ from pyspark.sql import functions as F
 from linkgraph.graph import LinkGraph
 from linkgraph.superstep import (
     CheckpointStore,
-    SuperstepLoop,
     fixpoint,
     iteration_conf,
     lazy_cut,
     pick_partitions,
     release_cut,
     seminaive,
+    supersteps,
 )
 
 
@@ -91,9 +96,8 @@ def weakly_connected_components(
         res = _wcc_local(spark, ids, graph.edge_ids())
         return res.join(ids, "id").select("name", "id", "component")
     # adjacency + a self-message edge per node: folding the node's own label
-    # into the min as a message keeps each superstep's plan referencing the
-    # state exactly ONCE (linear lineage — a state referenced twice doubles
-    # the logical plan per iteration and OOMs the driver on long runs)
+    # into the min as a message keeps each superstep's plan reading the
+    # state once, and the self-message is the node's previous label
     raw_und = (
         graph.undirected_edge_ids()
         .unionByName(ids.select("id", F.col("id").alias("nbr_id")))
@@ -137,14 +141,51 @@ def weakly_connected_components(
             store.validate_meta(meta)
             store.write_meta(meta)
 
-        loop = SuperstepLoop(spark, store=store, resume=resume)
-        state, start_it = loop.begin(init)
         n = ids.count()
         use_broadcast = n <= broadcast_threshold
 
-        state = _run_loop(
-            loop, state, und, start_it, max_iter, use_broadcast, iters_out
-        )
+        def step(state, _row):
+            # messages INTO v: neighbours' previous labels, plus the
+            # self-message carrying v's own, kept as ``prev_component``
+            labels = state.select(
+                F.col("id").alias("nbr_id"), F.col("component").alias("nbr_label")
+            )
+            if use_broadcast:
+                labels = F.broadcast(labels)
+            return (
+                und.join(labels, "nbr_id")
+                .groupBy("id")
+                .agg(
+                    F.min("nbr_label").alias("component"),
+                    F.min(
+                        F.when(F.col("nbr_id") == F.col("id"), F.col("nbr_label"))
+                    ).alias("prev_component"),
+                )
+            )
+
+        def save(it, state, row):
+            store.save(
+                state.drop("prev_component"), it,
+                {"algorithm": "wcc", "changed": row["changed"]},
+            )
+
+        state, start = (init, 1) if store is None or not resume else store.resume(init)
+        for it, state, row in supersteps(
+            "wcc",
+            state.select(
+                "id", "component", F.lit(None).cast("long").alias("prev_component")
+            ),
+            step,
+            F.count(
+                F.when(F.col("component") < F.col("prev_component"), 1)
+            ).alias("changed"),
+            rounds=range(start, max_iter + 1),
+            save=None if store is None else save,
+        ):
+            if iters_out is not None:
+                iters_out["iterations"] = it
+            if row["changed"] == 0:
+                break
     return state.join(ids, "id").select("name", "id", "component")
 
 
@@ -426,42 +467,6 @@ def condensation(graph: LinkGraph, labels: DataFrame | None = None) -> DataFrame
     )
 
 
-def _run_loop(loop, state, und, it, max_iter, use_broadcast, iters_out=None):
-    while it <= max_iter:
-        if iters_out is not None:
-            iters_out["iterations"] = it
-        # messages INTO v: neighbours' previous labels (incl. the self-message
-        # carrying v's own previous label) → min is the new label
-        labels = state.select(
-            F.col("id").alias("nbr_id"), F.col("component").alias("nbr_label")
-        )
-        if use_broadcast:
-            labels = F.broadcast(labels)
-        new_state = (
-            und.join(labels, "nbr_id")
-            .groupBy("id")
-            .agg(F.min("nbr_label").alias("component"))
-        )
-        new_state = loop.stage(new_state, it, materialize=False)
-        # changed-count in the SAME action that fills the staged cache: a
-        # co-partitioned SHJ against the previous state (cheap next to the
-        # message stage; threading prev through the aggregate instead widens
-        # every exchange row — measured strictly worse on the pagerank loop)
-        changed = (
-            new_state.alias("n")
-            .join(state.alias("p"), "id")
-            .filter(F.col("n.component") < F.col("p.component"))
-            .count()
-        )
-        state = loop.commit(
-            it, metrics={"algorithm": "wcc", "changed": changed}
-        )
-        it += 1
-        if changed == 0:
-            break
-    return state
-
-
 def _reach_from_set(
     seeds: DataFrame, probe_edges: DataFrame, max_rounds: int = 256
 ) -> DataFrame:
@@ -522,69 +527,77 @@ def bowtie_decomposition(graph: LinkGraph, max_rounds: int = 256) -> DataFrame:
     in_components.rs, out_components.rs) composed into the standard
     macro-structure summary the reference never shipped.
     """
-    from linkgraph.superstep import pick_partitions
-
     spark = graph.spark
     ids = graph.ids().select("id").persist()
     edges = graph.edge_ids().filter(
         F.col("src_id") != F.col("dst_id")
     ).persist()
     P = pick_partitions(spark, edges.count())
-    fwd_e = (
-        edges.select(F.col("src_id").alias("u"), F.col("dst_id").alias("v"))
-        .repartition(P, "u")
-        .persist()
-    )
-    bwd_e = (
-        edges.select(F.col("dst_id").alias("u"), F.col("src_id").alias("v"))
-        .repartition(P, "u")
-        .persist()
-    )
-    und_e = fwd_e.unionByName(bwd_e).repartition(P, "u").persist()
-    edges.unpersist()
-    scc = strongly_connected_components(graph)
-    top = scc.groupBy("scc").count().orderBy(F.desc("count"), "scc").limit(1).collect()
-    largest = top[0]["scc"] if top else None  # None: empty graph, every class empty
-    core = (
-        scc.filter(F.col("scc") == F.lit(largest))
-        .select("id")
-        .localCheckpoint(eager=True)
-    )
-    fwd = _reach_from_set(core, fwd_e, max_rounds)
-    bwd = _reach_from_set(core, bwd_e, max_rounds)
-    weak = _reach_from_set(core, und_e, max_rounds)
-    out_ = fwd.join(core, "id", "left_anti").localCheckpoint(eager=True)
-    in_ = bwd.join(core, "id", "left_anti").localCheckpoint(eager=True)
-    disconnected = ids.join(weak, "id", "left_anti")
-    t, (n_t,) = lazy_cut(
-        weak.join(core, "id", "left_anti")
-        .join(in_, "id", "left_anti")
-        .join(out_, "id", "left_anti"),
-        F.count(F.lit(1)),
-    )
-    # no tendril candidates (the common case on dense graphs, where the weak
-    # component is exactly SCC + IN + OUT): skip the two remaining BFS runs
-    from_in = to_out = t
-    if n_t:
-        from_in = t.join(_reach_from_set(in_, fwd_e, max_rounds), "id")
-        to_out = t.join(_reach_from_set(out_, bwd_e, max_rounds), "id")
-    tube = from_in.join(to_out, "id")
-    tendril_in = from_in.join(to_out, "id", "left_anti")
-    tendril_out = to_out.join(from_in, "id", "left_anti")
-    other = t.join(from_in, "id", "left_anti").join(to_out, "id", "left_anti")
+    with iteration_conf(spark, shuffle_partitions=P):
+        fwd_e = (
+            edges.select(F.col("src_id").alias("u"), F.col("dst_id").alias("v"))
+            .repartition(P, "u")
+            .persist()
+        )
+        bwd_e = (
+            edges.select(F.col("dst_id").alias("u"), F.col("src_id").alias("v"))
+            .repartition(P, "u")
+            .persist()
+        )
+        und_e = fwd_e.unionByName(bwd_e).repartition(P, "u").persist()
+        edges.unpersist()
+        scc = strongly_connected_components(graph)
+        top = (
+            scc.groupBy("scc").count().orderBy(F.desc("count"), "scc").limit(1).collect()
+        )
+        # None: empty graph, every class empty
+        largest = top[0]["scc"] if top else None
+        core = (
+            scc.filter(F.col("scc") == F.lit(largest))
+            .select("id")
+            .localCheckpoint(eager=True)
+        )
+        fwd = _reach_from_set(core, fwd_e, max_rounds)
+        bwd = _reach_from_set(core, bwd_e, max_rounds)
+        weak = _reach_from_set(core, und_e, max_rounds)
+        out_ = fwd.join(core, "id", "left_anti").localCheckpoint(eager=True)
+        in_ = bwd.join(core, "id", "left_anti").localCheckpoint(eager=True)
+        disconnected = ids.join(weak, "id", "left_anti")
+        t, (n_t,) = lazy_cut(
+            weak.join(core, "id", "left_anti")
+            .join(in_, "id", "left_anti")
+            .join(out_, "id", "left_anti"),
+            F.count(F.lit(1)),
+        )
+        # no tendril candidates (the common case on dense graphs, where the
+        # weak component is exactly SCC + IN + OUT): skip the two last BFS runs
+        from_in = to_out = t
+        if n_t:
+            from_in = t.join(_reach_from_set(in_, fwd_e, max_rounds), "id")
+            to_out = t.join(_reach_from_set(out_, bwd_e, max_rounds), "id")
+        tube = from_in.join(to_out, "id")
+        tendril_in = from_in.join(to_out, "id", "left_anti")
+        tendril_out = to_out.join(from_in, "id", "left_anti")
+        other = t.join(from_in, "id", "left_anti").join(to_out, "id", "left_anti")
 
-    classes = [
-        ("SCC", core),
-        ("IN", in_),
-        ("OUT", out_),
-        ("TUBE", tube),
-        ("TENDRIL_IN", tendril_in),
-        ("TENDRIL_OUT", tendril_out),
-        ("OTHER", other),
-        ("DISCONNECTED", disconnected),
-    ]
-    counts = [(cls, df.count()) for cls, df in classes]
+        classes = [
+            ("SCC", core),
+            ("IN", in_),
+            ("OUT", out_),
+            ("TUBE", tube),
+            ("TENDRIL_IN", tendril_in),
+            ("TENDRIL_OUT", tendril_out),
+            ("OTHER", other),
+            ("DISCONNECTED", disconnected),
+        ]
+        # every node is in one class: one job counts them all
+        members = reduce(
+            DataFrame.unionByName, [df.select(F.lit(c).alias("cls")) for c, df in classes]
+        )
+        got = dict(members.groupBy("cls").count().collect())
     for e in (fwd_e, bwd_e, und_e):
         e.unpersist()
     ids.unpersist()
-    return spark.createDataFrame(counts, "cls string, n_nodes long")
+    return spark.createDataFrame(
+        [(c, got.get(c, 0)) for c, _ in classes], "cls string, n_nodes long"
+    )

@@ -18,8 +18,12 @@ Semantics match the reference exactly
 
 Spark-first: both message families ride ONE union'd, pre-partitioned message
 -edge table (``from_id → to_id`` tagged by kind), so each superstep is a
-single join + hash aggregate over state referenced once (linear lineage),
-then one one-row aggregate for totals + convergence.
+single join + hash aggregate, joined back to the state, and one one-row
+aggregate of the new state (totals + convergence) — one Spark job per
+superstep (:func:`linkgraph.superstep.supersteps`).  A round is normalised
+by its own totals, which its job only yields at the end, so the next
+round's job normalises it and measures its change: the loop runs one
+message round past the converged one.
 """
 
 from __future__ import annotations
@@ -28,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph
-from linkgraph.superstep import SuperstepLoop, iteration_conf, pick_partitions
+from linkgraph.superstep import iteration_conf, pick_partitions, supersteps
 
 
 def hits(
@@ -104,20 +108,25 @@ def hits(
         msgs_edges.count()
         raw_msgs.unpersist()  # the pre-repartition copy is no longer needed
 
-        init = ids.select(
-            "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
-        ).repartition(P, "id")
-
-        loop = SuperstepLoop(spark)
-        state, start_it = loop.begin(init)
         use_broadcast = n <= broadcast_threshold
 
-        for it in range(start_it, max_iter + 1):
-            if iters_out is not None:
-                iters_out["iterations"] = it
-            sender = state.select(
-                F.col("id").alias("from_id"), "hub", "auth"
+        def sent(state, row):
+            # the scores ``state``'s round ends with: what it received,
+            # normalised by the round's own totals (its witness row); the
+            # initial state received nothing (NULL): the reference's 1.0 seeds
+            th = (row["th"] if row else None) or 1.0
+            ta = (row["ta"] if row else None) or 1.0
+            return state.select(
+                "id",
+                F.coalesce(F.col("recv_auth") / F.lit(ta), F.lit(1.0)).alias("hub"),
+                F.coalesce(F.col("recv_hub") / F.lit(th), F.lit(1.0)).alias("auth"),
+                F.col("hub").alias("prev_hub"),
+                F.col("auth").alias("prev_auth"),
             )
+
+        def step(state, row):
+            cur = sent(state, row)
+            sender = cur.select(F.col("id").alias("from_id"), "hub", "auth")
             if use_broadcast:
                 sender = F.broadcast(sender)
             recv = (
@@ -131,52 +140,47 @@ def hits(
                         F.when(F.col("kind") == "h", F.col("w") * F.col("auth"))
                     ).alias("recv_auth"),
                 )
-                .select(
-                    "id",
-                    F.coalesce("recv_hub", F.lit(0.0)).alias("recv_hub"),
-                    F.coalesce("recv_auth", F.lit(0.0)).alias("recv_auth"),
-                )
             )
-            recv = loop.stage(recv, it, materialize=False)
-            # ONE driver action per superstep: the received totals ride into
-            # the convergence aggregate as a broadcast one-row cross join, so
-            # normalisation happens inside the same job that computes the
-            # max-|Δ| (and that job also materialises the recv cache)
-            tot = recv.agg(
-                F.sum("recv_hub").alias("th"), F.sum("recv_auth").alias("ta")
-            )
-            th_nz = F.when(F.col("th") != 0.0, F.col("th")).otherwise(F.lit(1.0))
-            ta_nz = F.when(F.col("ta") != 0.0, F.col("ta")).otherwise(F.lit(1.0))
-            diff = (
-                recv.join(
-                    state.select(
-                        "id", F.col("hub").alias("ph"), F.col("auth").alias("pa")
-                    ),
-                    "id",
-                )
-                .crossJoin(F.broadcast(tot))
-                .agg(
-                    F.max(F.abs(F.col("recv_auth") / ta_nz - F.col("ph"))).alias(
-                        "dh"
-                    ),
-                    F.max(F.abs(F.col("recv_hub") / th_nz - F.col("pa"))).alias(
-                        "da"
-                    ),
-                    F.first("th").alias("th"),
-                    F.first("ta").alias("ta"),
-                )
-                .first()
-            )
-            th = diff["th"] or 1.0
-            ta = diff["ta"] or 1.0
-            committed = loop.commit(it)  # prev dropped; recv stays cached
-            state = committed.select(
+            return cur.join(recv, "id", "left").select(
                 "id",
-                (F.col("recv_auth") / F.lit(ta)).alias("hub"),
-                (F.col("recv_hub") / F.lit(th)).alias("auth"),
+                "hub",
+                "auth",
+                "prev_hub",
+                "prev_auth",
+                F.coalesce("recv_hub", F.lit(0.0)).alias("recv_hub"),
+                F.coalesce("recv_auth", F.lit(0.0)).alias("recv_auth"),
             )
-            if (diff["dh"] or 0.0) <= tol and (diff["da"] or 0.0) <= tol:
+
+        # Round r's state carries the scores round r sent (round r-1's
+        # result), the ones before them, and what round r received.  Its
+        # totals normalise round r only inside round r+1's job, so that job
+        # measures round r-1's change: convergence shows one round late,
+        # and the converged round's scores are the state's ``hub, auth``.
+        state = ids.select(
+            "id",
+            *[
+                F.lit(None).cast("double").alias(c)
+                for c in ("hub", "auth", "prev_hub", "prev_auth", "recv_hub", "recv_auth")
+            ],
+        ).repartition(P, "id")
+        row = None
+        for it, state, row in supersteps(
+            "hits",
+            state,
+            step,
+            F.sum("recv_hub").alias("th"),
+            F.sum("recv_auth").alias("ta"),
+            F.max(F.abs(F.col("hub") - F.col("prev_hub"))).alias("dh"),
+            F.max(F.abs(F.col("auth") - F.col("prev_auth"))).alias("da"),
+            rounds=range(1, max_iter + 1),
+        ):
+            if it > 1 and row["dh"] <= tol and row["da"] <= tol:
+                it -= 1  # that round converged
                 break
+        else:
+            state = sent(state, row)  # the cap: the last round's scores
+        if iters_out is not None and row is not None:
+            iters_out["iterations"] = it
     return state.join(ids, "id").select("name", "id", "hub", "auth")
 
 

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph
+from linkgraph.superstep import iteration_conf, pick_partitions, supersteps
 
 
 AUTO_EXACT_MAX_EDGES = 2_000_000  # ~one executor task's worth of adjacency
@@ -143,8 +144,6 @@ def _lpa_exact(graph: LinkGraph, seed: int, max_sweeps: int) -> DataFrame:
 def _lpa_sync(
     graph: LinkGraph, seed: int, max_sweeps: int, tol_frac: float = 0.0
 ) -> DataFrame:
-    from linkgraph.superstep import iteration_conf, pick_partitions
-
     spark = graph.spark
     # size the loop's exchanges to the actual adjacency volume (AQE is off
     # inside iteration_conf, so nothing coalesces empty tasks for us):
@@ -197,44 +196,42 @@ def _lpa_sync_loop(
             "prev_label",
         )
 
-    state = ids.select("id", F.col("id").alias("label")).repartition(P, "id").persist()
-    n_nodes = state.count()
-    changed_cap = int(tol_frac * n_nodes)  # tol_frac=0 -> exact fixpoint
-    fingerprints: list[int] = []  # per-pair state hashes: period-2 cycle guard
     # PAIR granularity: the parity schedule updates each node AT MOST ONCE
     # per even+odd pair, so "no movement across a full pair" ≡ "labels
-    # unchanged since pair start" — two sweeps fuse into ONE action (the
-    # two references to the un-materialised first sweep are identical
-    # subtrees, deduped by AQE ReusedExchange), halving driver-side
-    # latency, with a lineage cut per pair.  Every exit lands on an even
-    # sweep count, so a fixed even-``max_sweeps`` unroll stays engine-exact.
-    sweeps_done = 0
-    while sweeps_done < max_sweeps:
-        cur = state.select("id", "label", F.col("label").alias("prev_label"))
-        cur = one_sweep(cur, sweeps_done)
-        in_pair = 1
-        if sweeps_done + 1 < max_sweeps:
-            cur = one_sweep(cur, sweeps_done + 1)
-            in_pair = 2
-        new_state = cur.localCheckpoint(eager=True)
-        stats = new_state.agg(
-            F.count(F.when(F.col("label") != F.col("prev_label"), 1)).alias("chg"),
-            F.sum(
-                F.xxhash64("id", "label").bitwiseAND(F.lit(0xFFFFFFFF))
-            ).alias("fp"),
-        ).first()
-        changed, fp = stats["chg"], int(stats["fp"] or 0)
-        state.unpersist()
-        state = new_state.select("id", "label")
-        sweeps_done += in_pair
-        if in_pair == 2 and changed <= changed_cap:
+    # unchanged since pair start" — two sweeps fuse into ONE Spark job that
+    # computes, cuts and measures the pair, the pair-start label riding
+    # along as ``prev_label``.  Every exit lands on an even sweep count, so
+    # a fixed even-``max_sweeps`` unroll stays engine-exact.
+    first_sweeps = iter(range(0, max_sweeps, 2))
+
+    def pair(state: DataFrame, _row) -> DataFrame:
+        first = next(first_sweeps)
+        cur = one_sweep(
+            state.select("id", "label", F.col("label").alias("prev_label")), first
+        )
+        return one_sweep(cur, first + 1) if first + 1 < max_sweeps else cur
+
+    state = ids.select(
+        "id", F.col("id").alias("label"), F.col("id").alias("prev_label")
+    ).repartition(P, "id")
+    changed_cap = int(tol_frac * ids.count()) if tol_frac else 0  # 0: exact fixpoint
+    last_fp = None  # the previous pair's state hash: period-2 cycle guard
+    for rnd, state, row in supersteps(
+        "lpa",
+        state,
+        pair,
+        F.count(F.when(F.col("label") != F.col("prev_label"), 1)).alias("chg"),
+        F.sum(F.xxhash64("id", "label").bitwiseAND(F.lit(0xFFFFFFFF))).alias("fp"),
+        rounds=range(1, (max_sweeps + 1) // 2 + 1),
+    ):
+        if 2 * rnd <= max_sweeps and row["chg"] <= changed_cap:
             # a full even+odd pair within tolerance (tol_frac=0: fixpoint —
             # further sweeps are provable no-ops, any longer unroll matches)
             break
-        if fingerprints and fp == fingerprints[-1]:
+        if row["fp"] == last_fp:
             # period-2 oscillation (e.g. a reciprocal pair whose endpoints
             # share hash parity swapping labels forever): state repeats
             # every pair, so stopping here equals any longer even unroll
             break
-        fingerprints.append(fp)
+        last_fp = row["fp"]
     return state.join(ids, "id").select("name", "id", "label")

@@ -28,10 +28,13 @@ Spark-first execution, designed for ~10^9 nodes / 10^11 edges:
   combine already collapses hot destination keys per input partition, which
   is exactly the two-phase salted-aggregation pattern — no hand salting
   needed for sums (see adjacency.py for the grouped-kernel/CSR variant);
-- convergence + next-iteration sink mass are folded into ONE one-row
-  aggregate per superstep (a co-partitioned no-exchange join against the
-  previous state inside the same action that fills the staged cache), so
-  each iteration costs one driver roundtrip.
+- the state joins its own messages (both sides hash-partitioned by id, no
+  exchange) and carries its previous score on as ``prev_score``, so the
+  convergence delta and the next superstep's sink mass are ONE one-row
+  aggregate of the new state, measured by the same Spark job that computes
+  and cuts it (:func:`linkgraph.superstep.supersteps`): one job and one
+  driver roundtrip per superstep, plus a checkpoint write when
+  ``checkpoint_dir`` is given (snapshots keep ``id, out_degree, score``).
 """
 
 from __future__ import annotations
@@ -43,7 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph, persist_once
-from linkgraph.superstep import CheckpointStore, SuperstepLoop, iteration_conf
+from linkgraph.superstep import CheckpointStore, iteration_conf, supersteps
 
 DAMPING_DEFAULT = 0.85
 
@@ -243,16 +246,13 @@ def pagerank_on_ids(
             edges.groupBy(F.col("src_id").alias("id"))
             .agg(F.count("*").alias("out_degree"))
         )
-        # static per-node table: (id, out_degree) — partitioned by id once
+        # per-node (id, out_degree), partitioned by id: the state's layout
         static = (
             ids.select("id")
             .join(deg, "id", "left")
             .fillna(0, subset=["out_degree"])
             .repartition(P, "id")
-            .sortWithinPartitions("id")
-            .persist()
         )
-        n_sinks = static.filter(F.col("out_degree") == 0).count()
 
         teleport = (1.0 - damping) / n
         if init_scores is None:
@@ -287,31 +287,9 @@ def pagerank_on_ids(
             }
             store.validate_meta(meta)
             store.write_meta(meta)
-        if use_blocks:
-            release_raw()  # blocks + static are materialized; done
-        loop = SuperstepLoop(spark, store=store, resume=resume)
-        state, start_it = loop.begin(init)
-
-        # sink mass of the current (previous-iteration) state
-        if n_sinks:
-            sink_mass = (
-                state.filter(F.col("out_degree") == 0).agg(F.sum("score")).first()[0]
-            )
-        else:
-            sink_mass = 0.0
-
         use_broadcast = n <= broadcast_threshold
 
-        # Both kernels return messages as (id, msum).  The convergence delta
-        # joins the staged state against the previous one — a co-partitioned
-        # SHJ over the two caches in the SAME single action that materializes
-        # the staged cache (stage(materialize=False)), so each superstep
-        # still costs one driver roundtrip.  Threading prev_score through
-        # the message aggregate instead was measured strictly worse at 160M
-        # edges (the extra exchange column + per-edge branch cost ~30% at
-        # local[4] and ~12% at local[16]): the 20M-row state join is cheap
-        # next to the 160M-row message stage, and it lives in the stats
-        # query, not the staged plan, so lineage stays linear.
+        # Both kernels return messages as (id, msum).
         if use_blocks:
             def msgs_of(state_df, _blocks=blocks, _P=P):
                 state_b = state_df.select(
@@ -331,22 +309,63 @@ def pagerank_on_ids(
             def msgs_of(state_df, _edges=edges, _bc=use_broadcast):
                 return contribution_messages(_edges, state_df, _bc)
 
+        def step(state, row):
+            # the state joins its own messages (both hash-partitioned by id:
+            # no exchange) and carries its score on as ``prev_score``, so the
+            # convergence delta is a column of the new state, measured in the
+            # job that computes it; ``row`` is the previous round's witness
+            sink_term = damping * (row["sink"] or 0.0) / n
+            return state.join(msgs_of(state), "id", "left").select(
+                "id",
+                "out_degree",
+                (
+                    F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))
+                    + F.lit(teleport + sink_term)
+                ).alias("score"),
+                F.col("score").alias("prev_score"),
+            )
+
+        gap = F.abs(F.col("score") - F.col("prev_score"))
+
+        def diff(row):
+            return math.sqrt(row["delta"]) if norm == "l2" else row["delta"]
+
+        def save(it, state, row):
+            store.save(
+                state.drop("prev_score"), it,
+                {"algorithm": "pagerank", "delta": diff(row), "tol": tol},
+            )
+
+        state, start = (init, 1) if store is None or not resume else store.resume(init)
+        rounds = supersteps(
+            "pagerank",
+            state.select(
+                "id", "out_degree", "score", F.lit(None).cast("double").alias("prev_score")
+            ),
+            step,
+            (F.sum(F.pow(gap, 2)) if norm == "l2" else F.sum(gap)).alias("delta"),
+            F.sum(F.when(F.col("out_degree") == 0, F.col("score"))).alias("sink"),
+            rounds=range(start, max_iter + 1),
+            save=None if store is None else save,
+        )
+        if use_blocks:
+            release_raw()  # the initial state is stored; done
         if timings_out is not None:
             timings_out.append(("setup", _time.monotonic() - _t_setup))
-        state = _run_loop(
-            spark, loop, state, msgs_of, static, n, n_sinks, sink_mass, damping,
-            teleport, norm, tol, max_iter, start_it, iters_out, timings_out,
-        )
-        # release the loop-scoped caches: the final state cache is already
-        # materialized (the last superstep's stats action filled it), so
-        # dropping its upstream relations only trades a cold recompute for
-        # not accumulating fat cached relations across repeated calls in
-        # one session
+        t0 = _time.monotonic()
+        for it, state, row in rounds:
+            if iters_out is not None:
+                iters_out["iterations"] = it
+            if timings_out is not None:
+                timings_out.append((it, _time.monotonic() - t0))
+                t0 = _time.monotonic()
+            if diff(row) <= tol * n:
+                break
+        # release the loop-scoped caches: the final state is a stored cut
         if use_blocks:
             blocks.unpersist()
         else:
             edges.unpersist()
-        static.unpersist()
 
     return state.select("id", "score")
 
@@ -499,62 +518,6 @@ def _pagerank_local(
     return spark.createDataFrame(pd.DataFrame({"id": id_sorted, "score": score}))
 
 
-def _run_loop(
-    spark, loop, state, msgs_of, static, n, n_sinks, sink_mass, damping,
-    teleport, norm, tol, max_iter, start_it, iters_out=None,
-    timings_out=None,
-):
-    for it in range(start_it, max_iter + 1):
-        _t_it = _time.monotonic()
-        if iters_out is not None:
-            iters_out["iterations"] = it
-        msgs = msgs_of(state)
-        sink_term = damping * sink_mass / n
-        # join against the STATIC leaf cache (the state plan is referenced
-        # once per iteration, in msgs — linear lineage)
-        new_state = (
-            static.join(msgs, "id", "left")
-            .select(
-                "id",
-                "out_degree",
-                (
-                    F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))
-                    + F.lit(teleport + sink_term)
-                ).alias("score"),
-            )
-        )
-        new_state = loop.stage(new_state, it, materialize=False)
-        # one-row aggregate: convergence delta vs prev + next sink mass, in
-        # the same action that fills the staged cache (the prev-state join
-        # is co-partitioned SHJ over two caches — no exchange)
-        delta_expr = (
-            F.sum(F.pow(F.abs(F.col("score") - F.col("prev_score")), 2))
-            if norm == "l2"
-            else F.sum(F.abs(F.col("score") - F.col("prev_score")))
-        )
-        stats = (
-            new_state.join(
-                state.select("id", F.col("score").alias("prev_score")), "id"
-            )
-            .agg(
-                delta_expr.alias("delta"),
-                F.sum(F.when(F.col("out_degree") == 0, F.col("score"))).alias("sink"),
-            )
-            .first()
-        )
-        delta = stats["delta"] or 0.0
-        sink_mass = stats["sink"] or 0.0
-        diff = math.sqrt(delta) if norm == "l2" else delta
-        state = loop.commit(
-            it, metrics={"algorithm": "pagerank", "delta": diff, "tol": tol}
-        )
-        if timings_out is not None:
-            timings_out.append((it, _time.monotonic() - _t_it))
-        if diff <= tol * n:
-            break
-    return state
-
-
 def personalized_pagerank(
     graph: LinkGraph,
     seeds: list[str],
@@ -574,10 +537,12 @@ def personalized_pagerank(
 
     Scale shape: identical to the superstep kernel — the per-iteration
     plan is :func:`contribution_messages` (ONE co-partitioned join + one
-    aggregate over the cached pre-partitioned edge table) plus the static
-    join carrying the per-node teleport column; state is cut per
-    superstep (PPR runs are seed-query-sized; for 100 TB checkpointed
-    runs use ``pagerank`` + a post-hoc seed projection or extend the
+    aggregate over the cached pre-partitioned edge table) joined back to
+    the state, which carries the per-node teleport column ``pvec`` and its
+    previous score as ``prev_score``, so one Spark job per superstep
+    computes, cuts and measures it (:func:`~linkgraph.superstep.supersteps`;
+    PPR runs are seed-query-sized; for 100 TB checkpointed runs use
+    ``pagerank`` + a post-hoc seed projection or extend the
     CheckpointStore path the same way).
     """
     from linkgraph.graph import name_to_id
@@ -613,35 +578,27 @@ def personalized_pagerank(
         outdeg = edge_ids.groupBy(F.col("src_id").alias("id")).agg(
             F.count("*").alias("out_degree")
         )
-        static = (
+        pvec = F.when(
+            F.array_contains(seed_lits, F.col("id")), F.lit(1.0 / n_seeds)
+        ).otherwise(F.lit(0.0))
+        state = (
             ids.select("id")
             .join(outdeg, "id", "left")
             .select(
                 "id",
                 F.coalesce("out_degree", F.lit(0)).alias("out_degree"),
-                F.when(
-                    F.array_contains(seed_lits, F.col("id")),
-                    F.lit(1.0 / n_seeds),
-                )
-                .otherwise(F.lit(0.0))
-                .alias("pvec"),
+                pvec.alias("score"),
+                pvec.alias("pvec"),
+                F.lit(None).cast("double").alias("prev_score"),
             )
             .repartition(P, "id")
-            .sortWithinPartitions("id")
-            .persist()
         )
-        state = static.select(
-            "id", "out_degree", F.col("pvec").alias("score"), "pvec"
-        ).localCheckpoint(eager=True)
-        sink_mass = (
-            state.filter(F.col("out_degree") == 0)
-            .agg(F.sum("score"))
-            .first()[0]
-            or 0.0
-        )
-        for _ in range(max_iter):
-            msgs = contribution_messages(edges, state)
-            new_state = static.join(msgs, "id", "left").select(
+
+        def step(state, row):
+            # the pagerank superstep: the state joins its own messages and
+            # carries its score on as ``prev_score``
+            sink_mass = row["sink"] or 0.0
+            return state.join(contribution_messages(edges, state), "id", "left").select(
                 "id",
                 "out_degree",
                 (
@@ -649,24 +606,19 @@ def personalized_pagerank(
                     + F.lit(1.0 - damping + damping * sink_mass) * F.col("pvec")
                 ).alias("score"),
                 "pvec",
-            ).localCheckpoint(eager=True)
-            stats = (
-                new_state.join(
-                    state.select("id", F.col("score").alias("prev_score")), "id"
-                )
-                .agg(
-                    F.sum(F.abs(F.col("score") - F.col("prev_score"))).alias("d"),
-                    F.sum(
-                        F.when(F.col("out_degree") == 0, F.col("score"))
-                    ).alias("sink"),
-                )
-                .first()
+                F.col("score").alias("prev_score"),
             )
-            state = new_state
-            sink_mass = stats["sink"] or 0.0
-            if (stats["d"] or 0.0) <= tol * n:
+
+        for _, state, row in supersteps(
+            "personalized_pagerank",
+            state,
+            step,
+            F.sum(F.abs(F.col("score") - F.col("prev_score"))).alias("d"),
+            F.sum(F.when(F.col("out_degree") == 0, F.col("score"))).alias("sink"),
+            rounds=range(1, max_iter + 1),
+        ):
+            if (row["d"] or 0.0) <= tol * n:
                 break
         edges.unpersist()
-        static.unpersist()
     release_edge_ids()
     return ids.join(state.select("id", "score"), "id").select("name", "id", "score")

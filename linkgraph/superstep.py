@@ -23,31 +23,34 @@ classpath (``df.writeTo(table)``); this sandbox image has no Iceberg jars,
 so the same layout is written as parquet snapshot directories — identical
 interface, per-snapshot atomic commit via the lineage append.
 
-Three drivers run the loops:
+Two drivers run the loops:
 
-- :func:`fixpoint` — for loops whose state has converged when a one-row
-  aggregate of it (the *witness*) stops changing: ``kcore`` (k-core peel,
-  k-truss peel, coreness, truss decomposition), ``structure.dag_path_counts``,
+- :func:`supersteps` — for loops measured by a one-row aggregate of their
+  state (the *witness*).  Each round is ONE Spark job: a lazy
+  ``localCheckpoint`` whose first consumer is the witness aggregate, so the
+  job computes, stores and measures the round; the superseded round is
+  freed once the next is stored (:func:`release_cut`), and the witness row
+  is handed to the next round.  A state carries the columns its
+  convergence check reads (a previous score or label), so no round joins
+  the previous one.  The caller owns the stop rule and may save each round
+  to a :class:`CheckpointStore` and resume from it.  It runs PageRank (the
+  ``superstep`` and ``blocks`` kernels, checkpointed) and
+  ``personalized_pagerank``; weakly connected components (checkpointed);
+  ``hits``; the centrality power iterations (eigenvector, Katz,
+  ``weighted_pagerank`` and so ``decayed_pagerank``); and sync label
+  propagation.  :func:`fixpoint` is the :func:`supersteps` that stops when
+  the witness repeats and raises at its cap: ``kcore`` (k-core peel, k-truss
+  peel, coreness, truss decomposition), ``structure.dag_path_counts``,
   ``paths.earliest_arrival_times`` / ``latest_departure_times``, the forward
   min-id colouring of ``components.strongly_connected_components``, and the
   min-label hook + pointer-jump merge ``components.min_label_merge`` (the
   superstep kernel of ``community.triangle_communities`` and the per-round
-  merge of ``mst.minimum_spanning_forest``).  Each round is ONE Spark job: a
-  lazy ``localCheckpoint`` whose first consumer is the witness aggregate, so
-  the job computes, stores and measures the round; the superseded round is
-  freed once the next is stored (:func:`release_cut`).
+  merge of ``mst.minimum_spanning_forest``).
 - :func:`seminaive` — for loops that grow their state until a round's
   delta is empty: ``paths`` BFS, Dijkstra and widest paths; in/out
   components, the SCC backward sweep and the bow-tie reach-from-set runs;
   ``centrality.multi_source_bfs``; SI infection in ``seir``.  ONE Spark job
   per round cuts and counts the delta and stores the merged state.
-- :class:`SuperstepLoop` — for pagerank, hits, the centrality power
-  iterations and weakly connected components.  They measure each round
-  against the PREVIOUS state (a delta or changed-row join), so both
-  buffers stay persisted; pagerank and wcc also write every round to a
-  :class:`CheckpointStore` and resume from it.  Each round persists the
-  state, measures it, and cuts lineage eagerly at commit — two jobs per
-  round.
 
 Other loops fit no driver (README "Execution model" says why) and keep
 their own; ``fastest_path_durations`` and ``onion_layers`` take the same
@@ -60,7 +63,7 @@ import json
 import logging
 import os
 import time as _time
-from collections.abc import Callable
+from collections.abc import Callable, Iterable, Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
@@ -238,109 +241,14 @@ class CheckpointStore:
     def load(self, iteration: int) -> DataFrame:
         return self.spark.read.parquet(self._state_path(iteration))
 
+    def resume(self, state: DataFrame) -> tuple[DataFrame, int]:
+        """The last completed iteration's state and the iteration after it;
+        ``state`` and iteration 1 when none has completed."""
+        last = self.last_completed()
+        return (state, 1) if last is None else (self.load(last), last + 1)
+
     def lineage(self) -> DataFrame:
         return self.spark.read.parquet(self._lineage_path)
-
-
-# Lineage-cut (localCheckpoint rebase) cadence is a LATENCY-vs-BANDWIDTH
-# trade, measured on Spark 4 at sf0.1 (16k-row state, 60 supersteps) and at
-# 160M edges / 20M-row state (8 pinned cores, 12 supersteps):
-#
-#   cadence        16k-row state     20M-row state
-#   every iter     0.40 s/superstep  3.64M e/s  (29% SLOWER — the rebase
-#                  (flat; total 26.5s)           re-materializes the state
-#                                                and the next join re-sorts
-#                                                the RDD-scan side)
-#   every 32       0.35s right after the cut, then +0.27 s/superstep of
-#                  driver-side growth — 145s total for 60 (worst of all)
-#   never          +0.01-0.02 s/superstep analysis growth over nested
-#                  caches — 60.4s total for 60; negligible next to the
-#                  ~30 s/superstep compute of a 160M-edge run
-#
-# So: SMALL state → cut every superstep (copy is free, analysis stays
-# flat); LARGE state → never cut inside a normal run (the in-loop
-# spark.sql.maxPlanStringLength cap bounds the plan-text render that the
-# old cadence-32 guarded against).  The mixed cadence-32 policy is strictly
-# dominated and gone.
-TRUNCATE_SMALL_ROWS = 5_000_000
-
-
-class SuperstepLoop:
-    """State-buffer management for iterated DataFrame algorithms.
-
-    Handles persist/unpersist of the double buffer, size-adaptive
-    ``localCheckpoint`` lineage truncation, optional durable checkpoints,
-    and resume. Algorithms drive it::
-
-        loop = SuperstepLoop(spark, store=..., resume=True)
-        state, start_it = loop.begin(initial_state_df)
-        for it in range(start_it, max_iter):
-            new_state = loop.stage(...derive from state..., it)  # both buffers live
-            delta = ...one-row agg joining new_state vs state...
-            state = loop.commit(it, metrics={"delta": delta})    # prev dropped
-            if converged: break
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        store: CheckpointStore | None = None,
-        resume: bool = False,
-    ):
-        self.spark = spark
-        self.store = store
-        self.resume = resume
-        self._truncate = True  # set from the state size by begin()
-        self._live: DataFrame | None = None
-        self._staged: DataFrame | None = None
-
-    def begin(self, initial: DataFrame) -> tuple[DataFrame, int]:
-        start = 1
-        state = initial
-        if self.store is not None and self.resume:
-            last = self.store.last_completed()
-            if last is not None:
-                state, start = self.store.load(last), last + 1
-        state = state.persist()
-        # see the cadence table above
-        self._truncate = state.count() <= TRUNCATE_SMALL_ROWS
-        self._live = state
-        return state, start
-
-    def stage(self, new_state: DataFrame, iteration: int, materialize: bool = True) -> DataFrame:
-        """Persist the next state buffer; the previous buffer stays live so
-        convergence aggregates can still join against it.
-
-        Pass ``materialize=False`` when the caller runs a full-scan action on
-        the staged frame before ``commit`` (e.g. the convergence aggregate) —
-        that action fills the cache, saving one job per superstep.
-        """
-        new_state = new_state.persist()
-        if materialize:
-            new_state.count()  # materialize while prev (its input) is cached
-        self._staged = new_state
-        return new_state
-
-    def commit(self, iteration: int, metrics: dict | None = None) -> DataFrame:
-        """Swap buffers: checkpoint the staged state, drop the previous one."""
-        assert self._staged is not None, "stage() must precede commit()"
-        if self.store is not None:
-            self.store.save(self._staged, iteration, metrics)
-        staged = self._staged
-        if self._truncate:
-            # hard plan-lineage cut: without this the logical plan nests one
-            # join deeper per superstep and Catalyst analysis time blows up.
-            # Cutting at COMMIT time reads the (already materialized) cache
-            # instead of recomputing the superstep — one compute + a cheap
-            # cache→checkpoint copy, not the double compute an eager
-            # localCheckpoint at stage() time costs.
-            cut = staged.localCheckpoint(eager=True)
-            staged.unpersist()
-            staged = cut
-        prev, self._live, self._staged = self._live, staged, None
-        if prev is not None:
-            prev.unpersist()
-        return self._live
 
 
 _log = logging.getLogger("linkgraph.superstep")
@@ -398,6 +306,54 @@ def release_cut(df: DataFrame) -> None:
     df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
+def supersteps(
+    name: str,
+    state: DataFrame,
+    step: Callable[[DataFrame, Row], DataFrame],
+    *witness: Column,
+    rounds: Iterable[int],
+    save: Callable[[int, DataFrame, Row], None] | None = None,
+) -> Iterator[tuple[int, DataFrame, Row]]:
+    """Run ``state = step(state, row)`` for each round number in ``rounds``;
+    yields ``(round, state, row)``.
+
+    ``witness`` is a one-row aggregate (one or more columns) of the state:
+    the initial ``state`` is cut and measured by :func:`lazy_cut` when this
+    is called (one Spark job), and each round's ``step`` output is cut and
+    measured the same way, so a round is ONE Spark job that computes,
+    stores and measures it.  ``row`` is that round's witness row; ``step``
+    receives the row of the state it reads (e.g. PageRank's sink mass).  A
+    state that carries the columns its convergence check reads (a previous
+    score or label) needs no join against the previous round.  The
+    superseded round is released once the next is stored; then
+    ``save(round, state, row)`` runs (a :class:`CheckpointStore` write)
+    and one DEBUG record goes to the ``linkgraph.superstep`` logger (name,
+    round, witness, wall).
+
+    The caller owns the stop rule: it leaves the loop when a row says so,
+    and the loop ends silently when ``rounds`` runs out (pass
+    :func:`rounds` for the loud ``not converged`` guard).  Nothing may read
+    a yielded state once the next round is asked for.
+    """
+    state, row = lazy_cut(state, *witness)
+
+    def run(state: DataFrame, row: Row):
+        for rnd in rounds:
+            t0 = _time.monotonic()
+            old = state
+            state, row = lazy_cut(step(state, row), *witness)
+            release_cut(old)
+            if save is not None:
+                save(rnd, state, row)
+            _log.debug(
+                "%s round=%d witness=%s wall_s=%.3f",
+                name, rnd, tuple(row), _time.monotonic() - t0,
+            )
+            yield rnd, state, row
+
+    return run(state, row)
+
+
 def fixpoint(
     name: str,
     state: DataFrame,
@@ -409,27 +365,25 @@ def fixpoint(
 
     ``witness`` is the one-row aggregate (one or more columns) that
     converges with the state — e.g. ``F.sum("v")`` for values that only
-    decrease.  The initial state and every round are cut with
-    :func:`lazy_cut`, so each round is one Spark job, and the superseded
-    round is released as soon as the next one is stored.  Returns the
-    final state and the number of rounds run; the round whose witness
-    equals the previous one is the last.  Raises ``RuntimeError`` if
-    ``max_rounds`` rounds do not converge (:func:`rounds`), and logs one DEBUG record per
-    round to the ``linkgraph.superstep`` logger.
+    decrease.  The :func:`supersteps` whose stop rule is "the witness
+    equals the previous one": one Spark job per round (plus one for the
+    initial state), superseded rounds released, one DEBUG record per
+    round.  Returns the final state and the number of rounds run, the
+    repeating one included.  Raises ``RuntimeError`` if ``max_rounds``
+    rounds do not converge (:func:`rounds`).
     """
-    state, prev = lazy_cut(state, *witness)
-    for rnd in rounds(name, max_rounds):
-        t0 = _time.monotonic()
-        old = state
-        state, cur = lazy_cut(step(state), *witness)
-        release_cut(old)
-        _log.debug(
-            "%s round=%d witness=%s wall_s=%.3f",
-            name, rnd, tuple(cur), _time.monotonic() - t0,
-        )
-        if cur == prev:
+    last = None
+
+    def advance(state: DataFrame, row: Row) -> DataFrame:
+        nonlocal last
+        last = row
+        return step(state)
+
+    for rnd, state, row in supersteps(
+        name, state, advance, *witness, rounds=rounds(name, max_rounds)
+    ):
+        if row == last:
             return state, rnd
-        prev = cur
 
 
 def rounds(name: str, max_rounds: int):
@@ -452,7 +406,9 @@ def seminaive(
     The initial ``state`` is also the first delta.  ``step(delta, state)``
     returns the rows new to (or better than) ``state``, reading ``state``;
     ``merge(state, delta)`` folds them in (``DataFrame.unionByName``, or
-    :func:`replace_by_id`).  ONE Spark job per round cuts and counts the
+    :func:`replace_by_id`); the merged state is coalesced (no shuffle) to
+    ``spark.sql.shuffle.partitions``, so a union does not add the delta's
+    partitions every round.  ONE Spark job per round cuts and counts the
     delta and stores the state merged the round before, whose inputs are
     then freed.  Returns the final state and the rounds run, the empty one
     included; raises ``RuntimeError`` after ``max_rounds`` non-empty rounds;
@@ -460,7 +416,8 @@ def seminaive(
     """
     # a job storing a cut also stores + cuts each marked frame it read, whole:
     # merged states are complete before their inputs are freed, lineage short
-    sc, key = state.sparkSession.sparkContext, "spark.checkpoint.checkpointAllMarkedAncestors"
+    spark, key = state.sparkSession, "spark.checkpoint.checkpointAllMarkedAncestors"
+    sc, P = spark.sparkContext, int(spark.conf.get("spark.sql.shuffle.partitions"))
     prior = sc.getLocalProperty(key)
     sc.setLocalProperty(key, "true")
     try:
@@ -479,7 +436,7 @@ def seminaive(
                 release_cut(new)
                 return state, rnd
             stale, delta = (state, new), new
-            state = mark_cut(merge(state, new))
+            state = mark_cut(merge(state, new).coalesce(P))
     finally:
         sc.setLocalProperty(key, prior)
 

@@ -1,3 +1,4 @@
+import json
 import random
 
 import pytest
@@ -73,6 +74,17 @@ def test_wcc_checkpoint_resume(spark, tmp_path):
         ).collect()
     }
     assert got == FX.WCC_TWO_COMPONENTS_EXPECTED
+    # one metrics record per completed iteration, with its changed count
+    from linkgraph.superstep import CheckpointStore
+
+    with open(f"{ck}/metrics.jsonl") as f:
+        metrics = [json.loads(line) for line in f]
+    assert [m["iteration"] for m in metrics] == list(range(1, len(metrics) + 1))
+    assert len(metrics) >= 2  # resumed past the killed run
+    assert all(m["algorithm"] == "wcc" for m in metrics)
+    assert metrics[-1]["changed"] == 0 < metrics[0]["changed"]
+    # snapshots hold the state's own columns, not the carried previous label
+    assert CheckpointStore(spark, ck).load(len(metrics)).columns == ["id", "component"]
 
 
 def test_scc_reference_golden(spark):

@@ -1,3 +1,4 @@
+import json
 import math
 import random
 
@@ -82,6 +83,25 @@ def test_randomized_vs_oracle(spark, seed, kernel):
         assert math.isclose(got[k], want[k], abs_tol=1e-9), (k, got[k], want[k])
 
 
+def test_superstep_kernel_runs_at_most_two_jobs_per_round(spark):
+    """A superstep is one Spark job that computes, cuts and measures the
+    state, plus the broadcast of the rank vector; four more rounds cost at
+    most eight more jobs."""
+    g = LinkGraph.from_edge_list(spark, FX.GEN_GRAPH).materialize()
+    sc = spark.sparkContext
+    jobs = {}
+    for rounds in (4, 8):
+        group = f"test-pagerank-jobs-{rounds}"
+        sc.setJobGroup(group, group)
+        try:
+            pagerank(g, max_iter=rounds, tol=0.0, kernel="superstep").collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs[rounds] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[8] - jobs[4] <= 2 * 4, jobs
+
+
 def test_no_broadcast_path_matches(spark):
     """Force the co-partitioned (non-broadcast) join path; results identical."""
     got = run_pr(
@@ -113,6 +133,14 @@ def test_checkpoint_resume(spark, tmp_path):
     lin = store.lineage().toPandas()
     assert set(lin.columns) == {"partition_id", "iteration", "rows", "checksum", "wall_ms"}
     assert lin.iteration.max() >= 4  # resumed past the killed run
+    # one metrics record per completed iteration, with its delta
+    with open(f"{ckpt}/metrics.jsonl") as f:
+        metrics = [json.loads(line) for line in f]
+    assert [m["iteration"] for m in metrics] == sorted(lin.iteration)
+    assert [m["iteration"] for m in metrics] == list(range(1, len(metrics) + 1))
+    assert all(m["algorithm"] == "pagerank" and m["delta"] >= 0 for m in metrics)
+    # snapshots hold the state's own columns, not the carried previous score
+    assert store.load(int(lin.iteration.max())).columns == ["id", "out_degree", "score"]
 
 
 def test_checkpoint_resume_across_kernels(spark, tmp_path):

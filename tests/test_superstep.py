@@ -1,8 +1,9 @@
-"""``superstep.fixpoint`` and ``superstep.seminaive`` on toy frames: the
-stop rule, the loud guard, one Spark job per round, one DEBUG record per
-round, superseded rounds released.
+"""``superstep.supersteps``, ``superstep.fixpoint`` and
+``superstep.seminaive`` on toy frames: the stop rule, the loud guard or the
+silent cap, one Spark job per round, one DEBUG record per round, superseded
+rounds released, checkpoint and resume.
 
-The fixpoint toy state halves every value each round (``v -> max(v) div
+The halving toy state halves every value each round (``v -> max(v) div
 2`` per id, a shuffle per round), so ``sum(v)`` runs 800, 400, 200, 96,
 48, 24, 8, 0, 0 and the witness first repeats in round 8.
 
@@ -16,7 +17,7 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.superstep import fixpoint, iteration_conf, seminaive
+from linkgraph.superstep import CheckpointStore, fixpoint, iteration_conf, seminaive, supersteps
 
 ROUNDS = 8
 PATH_ROUNDS = 8
@@ -28,6 +29,71 @@ def _start(spark):
 
 def _halve(state):
     return state.groupBy("id").agg(F.expr("max(v) div 2").alias("v"))
+
+
+def _jobs(spark, group, fn):
+    """``fn()``'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    with iteration_conf(spark, shuffle_partitions=4):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _halving(spark, rounds, save=None, state=None):
+    """``(round, witness)`` of each round run, and the witness rows that
+    ``step`` was handed."""
+    handed = []
+
+    def step(state, row):
+        handed.append(tuple(row))
+        return _halve(state)
+
+    run = [
+        (rnd, tuple(row))
+        for rnd, _, row in supersteps(
+            "halve", _start(spark) if state is None else state, step, F.sum("v"),
+            rounds=rounds, save=save,
+        )
+    ]
+    return run, handed
+
+
+def test_supersteps_stops_silently_at_the_cap(spark):
+    # the caller owns the stop rule: running out of rounds is no error,
+    # and each step is handed the witness row of the state it reads
+    run, handed = _halving(spark, range(1, 4))
+    assert run == [(1, (400,)), (2, (200,)), (3, (96,))]
+    assert handed == [(800,), (400,), (200,)]
+    assert _halving(spark, range(1, 1)) == ([], [])
+
+
+def test_supersteps_runs_one_job_per_round_and_resumes(spark, tmp_path):
+    store = CheckpointStore(spark, str(tmp_path / "ck"))
+
+    def save(rnd, state, row):
+        store.save(state, rnd, {"sum": row[0]})
+
+    _, plain = _jobs(spark, "test-supersteps-jobs", lambda: _halving(spark, range(1, 4)))
+    # one job cuts and measures the initial state, then one per round
+    assert plain == 1 + 3
+    _, saved = _jobs(
+        spark, "test-supersteps-save", lambda: _halving(spark, range(1, 4), save)
+    )
+    # a save writes the state and appends its lineage row
+    assert saved == 1 + 3 + 2 * 3
+    # resume: the last saved round stands in for the initial state
+    state, start = store.resume(_start(spark))
+    assert start == 4 and state.columns == ["id", "v"]
+    run, _ = _halving(spark, range(start, 6), state=state)
+    assert run == [(4, (48,)), (5, (24,))]
+    assert store.resume(_start(spark))[1] == 4  # resuming does not save
+    fresh = CheckpointStore(spark, str(tmp_path / "empty"))
+    assert fresh.resume(_start(spark))[1] == 1
 
 
 def test_fixpoint_stops_on_witness_equality(spark):
@@ -178,3 +244,6 @@ def test_seminaive_cuts_the_merged_state(spark):
         state, rounds = _bfs(spark)
     assert rounds == PATH_ROUNDS
     assert state._jdf.queryExecution().logical().rdd().isCheckpointed()
+    # the merge keeps the loop's partition count: a plain union would add
+    # every round's delta partitions to it
+    assert state.rdd.getNumPartitions() == 4
