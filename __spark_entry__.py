@@ -210,15 +210,15 @@ def q_trade_pagerank(spark, sf_dir):
     return res.select(F.col("id").alias("node"), F.round("score", 6).alias("score"))
 
 
-def q_trade_pagerank_blocks(spark, sf_dir):
-    """Same PageRank semantics through the distributed CSR-block kernel
-    (hash-partitioned adjacency blocks as Arrow arrays inside a cogrouped
-    pandas UDF — the north-star layout); oracle-checked against the same
+def q_trade_pagerank_superstep(spark, sf_dir):
+    """Same PageRank semantics through the distributed superstep kernel
+    (one co-partitioned contribution join + message aggregate per
+    superstep, the scale path); oracle-checked against the same
     recursive-SQL power iteration as ``trade_pagerank``."""
     from linkgraph.algorithms import pagerank
 
     g = _trade_graph(spark, sf_dir)
-    res = pagerank(g, max_iter=PR_ITERS, tol=0.0, norm="l1", kernel="blocks")
+    res = pagerank(g, max_iter=PR_ITERS, tol=0.0, norm="l1", kernel="superstep")
     return res.select(F.col("id").alias("node"), F.round("score", 6).alias("score"))
 
 
@@ -3327,7 +3327,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "trade_wcc": q_trade_wcc,
         "trade_windowed_wcc": q_trade_windowed_wcc,
         "trade_pagerank": q_trade_pagerank,
-        "trade_pagerank_blocks": q_trade_pagerank_blocks,
+        "trade_pagerank_superstep": q_trade_pagerank_superstep,
         "trade_pagerank_converged": q_trade_pagerank_converged,
         "trade_hits": q_trade_hits,
         "trade_sssp": q_trade_sssp,
@@ -6191,7 +6191,7 @@ SELECT n.id AS node, coalesce(p.n_squares, 0)::BIGINT AS n_squares
 FROM (SELECT DISTINCT id FROM und) n
 LEFT JOIN per p USING (id)
 """
-    sqls["trade_pagerank_blocks"] = _PAGERANK_ORACLE
+    sqls["trade_pagerank_superstep"] = _PAGERANK_ORACLE
 
     # HITS: the per-iteration normalisation constants cancel (each score is
     # linear in the previous iteration), so iterating UNNORMALISED and

@@ -48,7 +48,6 @@ def weakly_connected_components(
     graph: LinkGraph,
     max_iter: int = sys.maxsize,
     partitions: int | None = None,
-    broadcast_threshold: int = 1_000_000,
     checkpoint_dir: str | None = None,
     resume: bool = False,
     kernel: str = "auto",
@@ -141,17 +140,12 @@ def weakly_connected_components(
             store.validate_meta(meta)
             store.write_meta(meta)
 
-        n = ids.count()
-        use_broadcast = n <= broadcast_threshold
-
         def step(state, _row):
             # messages INTO v: neighbours' previous labels, plus the
             # self-message carrying v's own, kept as ``prev_component``
             labels = state.select(
                 F.col("id").alias("nbr_id"), F.col("component").alias("nbr_label")
             )
-            if use_broadcast:
-                labels = F.broadcast(labels)
             return (
                 und.join(labels, "nbr_id")
                 .groupBy("id")
@@ -261,7 +255,8 @@ def _wcc_local(spark, ids, edge_ids) -> DataFrame:
             break
         lab = new
     return spark.createDataFrame(
-        pd.DataFrame({"id": id_sorted, "component": id_sorted[lab]})
+        pd.DataFrame({"id": id_sorted, "component": id_sorted[lab]}),
+        "id long, component long",
     )
 
 

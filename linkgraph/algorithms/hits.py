@@ -40,7 +40,6 @@ def hits(
     max_iter: int = 20,
     tol: float = 0.01,
     partitions: int | None = None,
-    broadcast_threshold: int = 1_000_000,
     iters_out: dict | None = None,
     kernel: str = "auto",
 ) -> DataFrame:
@@ -108,8 +107,6 @@ def hits(
         msgs_edges.count()
         raw_msgs.unpersist()  # the pre-repartition copy is no longer needed
 
-        use_broadcast = n <= broadcast_threshold
-
         def sent(state, row):
             # the scores ``state``'s round ends with: what it received,
             # normalised by the round's own totals (its witness row); the
@@ -127,8 +124,6 @@ def hits(
         def step(state, row):
             cur = sent(state, row)
             sender = cur.select(F.col("id").alias("from_id"), "hub", "auth")
-            if use_broadcast:
-                sender = F.broadcast(sender)
             recv = (
                 msgs_edges.join(sender, "from_id")
                 .groupBy(F.col("to_id").alias("id"))

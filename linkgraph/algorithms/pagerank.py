@@ -20,10 +20,8 @@ Spark-first execution, designed for ~10^9 nodes / 10^11 edges:
 
 - the edge table is hash-partitioned by ``src_id`` once and cached; the
   rank vector is partitioned by ``id`` with the same partition count, so
-  the per-iteration join reuses partitioning instead of reshuffling edges;
-- when the rank vector is small enough it is **broadcast** into the join
-  (hub-vector broadcast per the north star) — the edge table then never
-  shuffles at all and the only exchange left is the message ``groupBy``;
+  the per-iteration join reuses partitioning instead of reshuffling edges,
+  and the only exchange left is the message ``groupBy``;
 - message aggregation is a plain hash aggregate: Spark's partial (map-side)
   combine already collapses hot destination keys per input partition, which
   is exactly the two-phase salted-aggregation pattern — no hand salting
@@ -61,6 +59,8 @@ DAMPING_DEFAULT = 0.85
 # BENCH.md.
 DRIVER_KERNEL_MAX = 20_000_000
 
+KERNELS = ("auto", "local", "superstep")
+
 
 def pagerank(
     graph: LinkGraph,
@@ -69,7 +69,6 @@ def pagerank(
     norm: str = "l2",
     damping: float = DAMPING_DEFAULT,
     partitions: int | None = None,
-    broadcast_threshold: int = 1_000_000,
     checkpoint_dir: str | None = None,
     resume: bool = False,
     iters_out: dict | None = None,
@@ -89,30 +88,16 @@ def pagerank(
     close, so convergence to the same tol takes a fraction of the
     supersteps (the incremental-analytics path; measured in BENCH.md).
 
-    ``broadcast_threshold``: if the node count is below this, the rank
-    vector is broadcast into the contribution join (a ~16-byte/node table:
-    10M nodes ≈ 160MB, still broadcastable on real executors; tune down on
-    memory-poor clusters). Above it, both sides stay co-partitioned.
-
     ``kernel``: ``"superstep"`` — the distributed BSP loop over the sorted
-    co-partitioned edge cache; ``"blocks"`` — the distributed BSP loop over
-    hash-partitioned CSR adjacency blocks (Arrow arrays inside a cogrouped
-    pandas kernel — the north-star layout; same superstep dataflow, the
-    join+aggregate replaced by gather+bincount); ``"local"`` — gather the
-    (deduplicated) edge list once and run the whole power iteration as a
-    vectorized numpy kernel on the driver, identical semantics; ``"auto"``
-    (default) — ``local`` when the graph fits ``DRIVER_KERNEL_MAX`` and no
-    checkpointing was requested, else ``superstep`` (the JVM sort-merge
-    path — measured faster than ``blocks`` per superstep on this image; the
-    CSR-block path is the layout the north rule names and stays selectable
-    for clusters where Arrow-batch gather beats the shuffle).  All kernels
-    implement
-    pagerank.rs:54-183 exactly and are cross-checked in
+    co-partitioned edge cache; ``"local"`` — gather the (deduplicated) edge
+    list once and run the whole power iteration as a vectorized numpy
+    kernel on the driver, identical semantics; ``"auto"`` (default) —
+    ``local`` when the graph fits ``DRIVER_KERNEL_MAX`` and no
+    checkpointing was requested, else ``superstep``.  Both kernels
+    implement pagerank.rs:54-183 exactly and are cross-checked in
     tests/test_pagerank.py.
     """
     ids = graph.ids().persist()
-    if ids.limit(1).count() == 0:
-        return ids.select("name", "id", F.lit(0.0).alias("score"))
     res = pagerank_on_ids(
         graph.spark,
         ids.select("id"),
@@ -122,7 +107,6 @@ def pagerank(
         norm=norm,
         damping=damping,
         partitions=partitions,
-        broadcast_threshold=broadcast_threshold,
         checkpoint_dir=checkpoint_dir,
         resume=resume,
         iters_out=iters_out,
@@ -134,9 +118,7 @@ def pagerank(
     return res.join(ids, "id").select("name", "id", "score")
 
 
-def contribution_messages(
-    edges: DataFrame, state_df: DataFrame, use_broadcast: bool = False
-) -> DataFrame:
+def contribution_messages(edges: DataFrame, state_df: DataFrame) -> DataFrame:
     """One superstep's message stage: per-node contribution join against the
     cached, pre-partitioned edge table + the message aggregate — (id, msum).
 
@@ -151,8 +133,6 @@ def contribution_messages(
     ranks = state_df.filter(F.col("out_degree") > 0).select(
         "id", (F.col("score") / F.col("out_degree")).alias("contrib")
     )
-    if use_broadcast:
-        ranks = F.broadcast(ranks)
     return (
         edges.join(ranks, edges.src_id == ranks.id)
         .groupBy(F.col("dst_id").alias("id"))
@@ -169,7 +149,6 @@ def pagerank_on_ids(
     norm: str = "l2",
     damping: float = DAMPING_DEFAULT,
     partitions: int | None = None,
-    broadcast_threshold: int = 1_000_000,
     checkpoint_dir: str | None = None,
     resume: bool = False,
     iters_out: dict | None = None,
@@ -182,6 +161,8 @@ def pagerank_on_ids(
     returns ``(id, score)``.  Pass ``pre_deduped=True`` when the edge table is
     already simple (distinct) to skip one shuffle.  ``init_scores`` warm-
     starts the iteration (see :func:`pagerank`)."""
+    if kernel not in KERNELS:
+        raise ValueError(f"pagerank: kernel must be one of {KERNELS}, got {kernel!r}")
     ids = nodes.select("id")
     n = ids.count()
     if n == 0:
@@ -214,34 +195,18 @@ def pagerank_on_ids(
     # on get AQE-wrapped plans whose within-partition ordering Catalyst can't
     # see, resurrecting per-superstep sorts.
     with iteration_conf(spark, shuffle_partitions=P):
-        use_blocks = kernel == "blocks"
-        if use_blocks:
-            # north-star layout: hash-partitioned CSR adjacency blocks as
-            # Arrow arrays — packed ONCE, cached pre-partitioned + pre-sorted
-            # on blk so the per-superstep cogroup never re-exchanges the
-            # (fat) block rows
-            blocks = (
-                _build_pr_blocks(raw_edges, P)
-                .repartition(P, "blk")
-                .sortWithinPartitions("blk")
-                .persist()
-            )
-            blocks.count()
-            edges = raw_edges  # degree/fingerprint source; released below
-        else:
-            # partition AND pre-sort within partitions: the per-superstep
-            # contribution join is a sort-merge join of two cached
-            # co-partitioned sides — with the cache already sorted on the
-            # join key, Catalyst elides the big-side Sort every iteration
-            # (only the small freshly-aggregated message side sorts).
-            #
-            edges = (
-                raw_edges.repartition(P, "src_id")
-                .sortWithinPartitions("src_id")
-                .persist()
-            )
-            edges.count()
-            release_raw()
+        # partition AND pre-sort within partitions: the per-superstep
+        # contribution join is a sort-merge join of two cached
+        # co-partitioned sides — with the cache already sorted on the
+        # join key, Catalyst elides the big-side Sort every iteration
+        # (only the small freshly-aggregated message side sorts).
+        edges = (
+            raw_edges.repartition(P, "src_id")
+            .sortWithinPartitions("src_id")
+            .persist()
+        )
+        edges.count()
+        release_raw()
         deg = (
             edges.groupBy(F.col("src_id").alias("id"))
             .agg(F.count("*").alias("out_degree"))
@@ -287,27 +252,6 @@ def pagerank_on_ids(
             }
             store.validate_meta(meta)
             store.write_meta(meta)
-        use_broadcast = n <= broadcast_threshold
-
-        # Both kernels return messages as (id, msum).
-        if use_blocks:
-            def msgs_of(state_df, _blocks=blocks, _P=P):
-                state_b = state_df.select(
-                    F.pmod(F.xxhash64("id"), F.lit(_P)).cast("int").alias("blk"),
-                    "id",
-                    "score",
-                )
-                partials = (
-                    state_b.groupBy("blk")
-                    .cogroup(_blocks.groupBy("blk"))
-                    .applyInPandas(_pr_block_step, "id long, msum double")
-                )
-                # per-block bincount already combined per distinct dst, so
-                # this groupBy only merges ≤P partials per id
-                return partials.groupBy("id").agg(F.sum("msum").alias("msum"))
-        else:
-            def msgs_of(state_df, _edges=edges, _bc=use_broadcast):
-                return contribution_messages(_edges, state_df, _bc)
 
         def step(state, row):
             # the state joins its own messages (both hash-partitioned by id:
@@ -315,7 +259,7 @@ def pagerank_on_ids(
             # convergence delta is a column of the new state, measured in the
             # job that computes it; ``row`` is the previous round's witness
             sink_term = damping * (row["sink"] or 0.0) / n
-            return state.join(msgs_of(state), "id", "left").select(
+            return state.join(contribution_messages(edges, state), "id", "left").select(
                 "id",
                 "out_degree",
                 (
@@ -348,8 +292,6 @@ def pagerank_on_ids(
             rounds=range(start, max_iter + 1),
             save=None if store is None else save,
         )
-        if use_blocks:
-            release_raw()  # the initial state is stored; done
         if timings_out is not None:
             timings_out.append(("setup", _time.monotonic() - _t_setup))
         t0 = _time.monotonic()
@@ -361,98 +303,10 @@ def pagerank_on_ids(
                 t0 = _time.monotonic()
             if diff(row) <= tol * n:
                 break
-        # release the loop-scoped caches: the final state is a stored cut
-        if use_blocks:
-            blocks.unpersist()
-        else:
-            edges.unpersist()
+        # release the loop-scoped cache: the final state is a stored cut
+        edges.unpersist()
 
     return state.select("id", "score")
-
-
-def _pack_pr_block(pdf):
-    """Pack one src-hash block of the edge table into CSR Arrow arrays —
-    the distributed analogue of the reference's per-shard sorted adjacency
-    (core/storage/mod.rs:29-33, adjset.rs:16-28): ``src_ids`` sorted unique,
-    ``indptr`` row offsets, ``dst_idx`` an int32 code per edge into the
-    block-local ``dst_uniq`` dictionary.  The dictionary encoding is what
-    makes the per-superstep message fold a ``bincount`` (map-side combine
-    over the block's distinct destinations) instead of a hash aggregation.
-    """
-    import numpy as np
-    import pandas as pd
-
-    src = pdf["src_id"].to_numpy(np.int64)
-    dst = pdf["dst_id"].to_numpy(np.int64)
-    order = np.lexsort((dst, src))
-    src, dst = src[order], dst[order]
-    src_ids, starts = np.unique(src, return_index=True)
-    indptr = np.append(starts, src.size).astype(np.int64)
-    dst_uniq, dst_idx = np.unique(dst, return_inverse=True)
-    return pd.DataFrame(
-        {
-            "blk": [int(pdf["blk"].iloc[0])],
-            "src_ids": [src_ids],
-            "indptr": [indptr],
-            "dst_uniq": [dst_uniq],
-            "dst_idx": [dst_idx.astype(np.int32)],
-        }
-    )
-
-
-def _build_pr_blocks(edge_ids: DataFrame, num_blocks: int) -> DataFrame:
-    """Deduped edges → one CSR row per src-hash block (north-star layout:
-    salted, hash-partitioned CSR adjacency blocks as Arrow arrays inside
-    grouped pandas UDFs).  Blocking by src means every out-edge of a node
-    lands in one block, so out-degrees are block-local facts (``indptr``
-    diffs) and the score vector shards cleanly by the same hash."""
-    return (
-        edge_ids.select(
-            F.pmod(F.xxhash64("src_id"), F.lit(num_blocks)).cast("int").alias("blk"),
-            "src_id",
-            "dst_id",
-        )
-        .groupBy("blk")
-        .applyInPandas(
-            _pack_pr_block,
-            "blk int, src_ids array<long>, indptr array<long>, "
-            "dst_uniq array<long>, dst_idx array<int>",
-        )
-    )
-
-
-def _pr_block_step(state_pdf, block_pdf):
-    """One block's superstep: gather this block's src scores (searchsorted
-    against the co-grouped state shard), scale by out-degree, scatter-add
-    per distinct destination with ``bincount``.  Emits the block's partial
-    message sums ``(id, msum)`` — already combined per dst, so the global
-    merge shuffles at most one row per (block, dst).
-
-    Stray endpoints keep join semantics: a src absent from the state shard
-    contributes 0, an unknown dst still gets a partial (dropped later by the
-    left join onto the node table)."""
-    import numpy as np
-    import pandas as pd
-
-    if block_pdf.shape[0] == 0 or state_pdf.shape[0] == 0:
-        return pd.DataFrame(
-            {"id": pd.Series(dtype="int64"), "msum": pd.Series(dtype="float64")}
-        )
-    row = block_pdf.iloc[0]
-    src_ids = np.asarray(row["src_ids"], dtype=np.int64)
-    indptr = np.asarray(row["indptr"], dtype=np.int64)
-    dst_uniq = np.asarray(row["dst_uniq"], dtype=np.int64)
-    dst_idx = np.asarray(row["dst_idx"], dtype=np.int32)
-    sid = state_pdf["id"].to_numpy(np.int64)
-    sc = state_pdf["score"].to_numpy(np.float64)
-    o = np.argsort(sid)
-    sid, sc = sid[o], sc[o]
-    pos = np.minimum(np.searchsorted(sid, src_ids), sid.size - 1)
-    score_src = np.where(sid[pos] == src_ids, sc[pos], 0.0)
-    counts = np.diff(indptr)
-    per_edge = np.repeat(score_src / counts, counts)
-    msum = np.bincount(dst_idx, weights=per_edge, minlength=dst_uniq.size)
-    return pd.DataFrame({"id": dst_uniq, "msum": msum})
 
 
 def _pagerank_local(

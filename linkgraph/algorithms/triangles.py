@@ -23,10 +23,11 @@ larger-id adjacency arrays** per canonical edge — the reference's own
 AdjSet-intersection scheme (triangle_count.rs:82-107) — so the shuffled
 volume is one row per edge, not per triangle.  Two interchangeable kernels:
 
-- ``jvm``   — ``array_intersect`` inside whole-stage codegen (default);
-- ``arrow`` — ``mapInPandas`` numpy kernel over Arrow batches (the
-  north-star's CSR-block pandas-UDF shape; same results, useful template
-  for kernels Spark lacks built-ins for).
+- ``csr`` — the adjacency broadcast once per executor as numpy CSR arrays,
+  intersected per edge inside ``mapInPandas`` (the north-star's CSR-block
+  shape); ``auto`` picks it up to ``CSR_BROADCAST_MAX`` adjacency entries;
+- ``jvm`` — ``array_intersect`` inside whole-stage codegen over joined
+  adjacency arrays; ``auto`` picks it above that budget.
 
 ``triangles_df`` still enumerates explicit (a,b,c) rows for listing /
 debugging; use the counters at scale.  Global counting orients edges by
@@ -88,6 +89,8 @@ def _out_nbrs(pairs: DataFrame) -> DataFrame:
 # adjacency-entry budget for the broadcast-CSR kernel: 20M int64 entries
 # ≈ 160MB on the driver / per executor — the hub-vector-broadcast regime.
 CSR_BROADCAST_MAX = 20_000_000
+
+KERNELS = ("auto", "csr", "jvm")
 
 
 def _csr_intersect_counts(edge_pairs: DataFrame, adj: DataFrame) -> DataFrame:
@@ -156,6 +159,8 @@ def _csr_intersect_counts(edge_pairs: DataFrame, adj: DataFrame) -> DataFrame:
 
 
 def _pick_kernel(graph: LinkGraph, kernel: str) -> str:
+    if kernel not in KERNELS:
+        raise ValueError(f"triangles: kernel must be one of {KERNELS}, got {kernel!r}")
     # every kernel scans the canonical edges at least twice (adjacency build
     # + per-edge probe), so materialize them once — persist() on the memoized
     # DataFrame is idempotent and shared by all later calls on this graph
@@ -193,23 +198,6 @@ def _edge_common_bigger(
             F.coalesce("hi_nbrs", F.array().cast("array<long>")).alias("hi_nbrs"),
         )
     )
-    if kernel == "arrow":
-        import numpy as np
-        import pandas as pd
-
-        def intersect_sizes(batches):
-            for pdf in batches:
-                counts = [
-                    np.intersect1d(a, b, assume_unique=True).size
-                    for a, b in zip(pdf["lo_nbrs"], pdf["hi_nbrs"])
-                ]
-                yield pd.DataFrame(
-                    {"lo": pdf["lo"], "hi": pdf["hi"], "triangles": counts}
-                )
-
-        return joined.mapInPandas(
-            intersect_sizes, "lo long, hi long, triangles long"
-        )
     return joined.select(
         "lo", "hi", F.size(F.array_intersect("lo_nbrs", "hi_nbrs")).alias("triangles")
     )
@@ -286,25 +274,9 @@ def local_triangle_count(graph: LinkGraph, kernel: str = "auto") -> DataFrame:
             "hi",
         )
     )
-    if kernel == "arrow":
-        import numpy as np
-        import pandas as pd
-
-        def intersect_sizes(batches):
-            for pdf in batches:
-                counts = [
-                    np.intersect1d(a, b, assume_unique=True).size
-                    for a, b in zip(pdf["lo_nbrs"], pdf["hi_nbrs"])
-                ]
-                yield pd.DataFrame(
-                    {"lo": pdf["lo"], "hi": pdf["hi"], "t_e": counts}
-                )
-
-        per_edge = joined.mapInPandas(intersect_sizes, "lo long, hi long, t_e long")
-    else:
-        per_edge = joined.select(
-            "lo", "hi", F.size(F.array_intersect("lo_nbrs", "hi_nbrs")).alias("t_e")
-        )
+    per_edge = joined.select(
+        "lo", "hi", F.size(F.array_intersect("lo_nbrs", "hi_nbrs")).alias("t_e")
+    )
     return _local_from_edge_counts(graph, per_edge)
 
 

@@ -34,7 +34,7 @@ Two drivers run the loops:
   convergence check reads (a previous score or label), so no round joins
   the previous one.  The caller owns the stop rule and may save each round
   to a :class:`CheckpointStore` and resume from it.  It runs PageRank (the
-  ``superstep`` and ``blocks`` kernels, checkpointed) and
+  ``superstep`` kernel, checkpointed) and
   ``personalized_pagerank``; weakly connected components (checkpointed);
   ``hits``; the centrality power iterations (eigenvector, Katz,
   ``weighted_pagerank`` and so ``decayed_pagerank``); and sync label
@@ -76,9 +76,8 @@ def iteration_conf(spark: SparkSession, shuffle_partitions: int | None = None):
 
     - Disables AQE: it re-plans and materializes every shuffle stage per
       query — measured ~8x per-superstep overhead on iterated micro-queries
-      — while buying nothing here, since superstep plans are stable and the
-      join strategies are chosen explicitly (broadcast under threshold,
-      co-partitioned above).
+      — while buying nothing here, since superstep plans are stable and
+      their joins run on co-partitioned sides.
     - Optionally pins ``spark.sql.shuffle.partitions`` to the loop's
       partition count so every groupBy exchange lands on the same
       partitioning as the cached state/edge tables (no re-exchanges), and
@@ -88,8 +87,10 @@ def iteration_conf(spark: SparkSession, shuffle_partitions: int | None = None):
       broadcast relation on the driver EVERY superstep — a serial
       per-iteration cost that inverts scaling (measured 8 cores beating 32).
       With both loop sides pre-hash-partitioned on the join key, SHJ runs
-      with zero exchange and no per-iteration sort; explicit
-      ``F.broadcast`` hints for genuinely tiny states still win over this.
+      with zero exchange and no per-iteration sort.  An explicit
+      ``F.broadcast`` hint would override this at the cost of one more
+      Spark job per superstep; PageRank's rank-vector hint won neither at
+      4,000 nor at 900,000 nodes (BENCH.md "Kernel A/B").
 
     All restored afterwards so one-shot queries keep AQE's skew handling.
     """

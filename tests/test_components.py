@@ -60,6 +60,7 @@ def test_randomized_vs_oracle(spark, kernel):
     got = run_wcc(spark, edges, kernel=kernel)
     want = wcc_oracle([(s, d) for _, s, d in edges])
     assert got == want
+    assert run_wcc(spark, [], kernel=kernel) == {}
 
 
 def test_wcc_checkpoint_resume(spark, tmp_path):

@@ -26,9 +26,12 @@ def assert_close(got: dict, want: dict, decimals: int):
 def test_five_edge_golden(spark):
     got = run_pr(spark, FX.FIVE_EDGE, max_iter=1000, norm="l2")
     assert_close(got, FX.FIVE_EDGE_PAGERANK, 5)
+    # an unknown kernel is refused, not rerouted to another plan
+    with pytest.raises(ValueError, match="'auto', 'local', 'superstep'"):
+        run_pr(spark, FX.FIVE_EDGE, kernel="csr")
 
 
-@pytest.mark.parametrize("kernel", ["local", "superstep", "blocks"])
+@pytest.mark.parametrize("kernel", ["local", "superstep"])
 def test_gen_graph_golden(spark, kernel):
     """python/tests/test_algorithms.py:232-246 — allclose 1e-6 gate,
     on BOTH the gathered-CSR kernel and the distributed superstep loop."""
@@ -65,7 +68,7 @@ def test_scores_sum_to_one(spark):
 
 @pytest.mark.parametrize(
     "seed,kernel",
-    [(7, "local"), (7, "superstep"), (7, "blocks"), (101, "local"), (101, "superstep"), (101, "blocks")],
+    [(7, "local"), (7, "superstep"), (101, "local"), (101, "superstep")],
 )
 def test_randomized_vs_oracle(spark, seed, kernel):
     """Quickcheck-style: random digraphs must match the numpy oracle that
@@ -83,32 +86,38 @@ def test_randomized_vs_oracle(spark, seed, kernel):
         assert math.isclose(got[k], want[k], abs_tol=1e-9), (k, got[k], want[k])
 
 
-def test_superstep_kernel_runs_at_most_two_jobs_per_round(spark):
-    """A superstep is one Spark job that computes, cuts and measures the
-    state, plus the broadcast of the rank vector; four more rounds cost at
-    most eight more jobs."""
+def test_superstep_kernels_run_one_job_per_round(spark):
+    """A superstep of PageRank or WCC is one Spark job that computes, cuts
+    and measures the state: no per-round broadcast or second pass, so each
+    extra round costs at most one more job."""
+    from linkgraph.algorithms import weakly_connected_components
+
     g = LinkGraph.from_edge_list(spark, FX.GEN_GRAPH).materialize()
     sc = spark.sparkContext
-    jobs = {}
-    for rounds in (4, 8):
-        group = f"test-pagerank-jobs-{rounds}"
+
+    def run(algo, max_iter, **kw):
+        """(Spark jobs, supersteps) of one call, its final collect included."""
+        group = f"test-{algo.__name__}-jobs-{max_iter}"
+        iters: dict = {}
         sc.setJobGroup(group, group)
         try:
-            pagerank(g, max_iter=rounds, tol=0.0, kernel="superstep").collect()
+            algo(g, max_iter=max_iter, iters_out=iters, kernel="superstep", **kw).collect()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
-        jobs[rounds] = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs[8] - jobs[4] <= 2 * 4, jobs
+        return len(sc.statusTracker().getJobIdsForGroup(group)), iters["iterations"]
 
-
-def test_no_broadcast_path_matches(spark):
-    """Force the co-partitioned (non-broadcast) join path; results identical."""
-    got = run_pr(
-        spark, FX.GEN_GRAPH, max_iter=20, broadcast_threshold=0, kernel="superstep"
+    (pr4_jobs, pr4_rounds), (pr8_jobs, pr8_rounds) = (
+        run(pagerank, k, tol=0.0) for k in (4, 8)
     )
-    for k, v in FX.GEN_GRAPH_PAGERANK.items():
-        assert math.isclose(got[k], v, abs_tol=1e-6)
+    assert pr8_rounds - pr4_rounds == 4
+    assert pr8_jobs - pr4_jobs <= 4, (pr4_jobs, pr8_jobs)
+    # WCC stops at its fixpoint: compare one round against the full run
+    (wcc1_jobs, wcc1_rounds), (wcc_jobs, wcc_rounds) = (
+        run(weakly_connected_components, k) for k in (1, 100)
+    )
+    assert wcc_rounds - wcc1_rounds >= 2
+    assert wcc_jobs - wcc1_jobs <= wcc_rounds - wcc1_rounds, (wcc1_jobs, wcc_jobs)
 
 
 def test_checkpoint_resume(spark, tmp_path):
@@ -141,25 +150,6 @@ def test_checkpoint_resume(spark, tmp_path):
     assert all(m["algorithm"] == "pagerank" and m["delta"] >= 0 for m in metrics)
     # snapshots hold the state's own columns, not the carried previous score
     assert store.load(int(lin.iteration.max())).columns == ["id", "out_degree", "score"]
-
-
-def test_checkpoint_resume_across_kernels(spark, tmp_path):
-    """The CSR-block kernel shares checkpoint layout + meta fingerprint with
-    the superstep kernel: a run killed under "blocks" resumes under
-    "superstep" (and the resumed trajectory converges to the golden)."""
-    g = LinkGraph.from_edge_list(spark, FX.GEN_GRAPH)
-    ckpt = str(tmp_path / "pr_ckpt_blocks")
-    pagerank(g, max_iter=3, tol=0.0, checkpoint_dir=ckpt, kernel="blocks")
-    g2 = LinkGraph.from_edge_list(spark, FX.GEN_GRAPH)
-    resumed = {
-        r.name: r.score
-        for r in pagerank(
-            g2, max_iter=20, norm="l2", checkpoint_dir=ckpt, resume=True,
-            kernel="superstep",
-        ).collect()
-    }
-    for k, v in FX.GEN_GRAPH_PAGERANK.items():
-        assert math.isclose(resumed[k], v, abs_tol=1e-6), (k, resumed[k], v)
 
 
 def test_personalized_pagerank_matches_local_power_iteration(spark):

@@ -71,7 +71,7 @@ def test_superstep_join_reuses_cache_partitioning(spark):
             .persist()
         )
         state.count()
-        msgs = contribution_messages(edges, state, use_broadcast=False)
+        msgs = contribution_messages(edges, state)
         plan = _formatted_plan(msgs)
         try:
             # explain() prints the cached relations' BUILD plans too —
@@ -83,6 +83,8 @@ def test_superstep_join_reuses_cache_partitioning(spark):
                 _formatted_plan(state)
             )
             assert _n_exchanges(plan) - cached <= 1, plan
+            # and no per-superstep broadcast of the state side
+            assert "BroadcastExchange" not in plan, plan
             assert "InMemoryTableScan" in plan, plan
         finally:
             edges.unpersist()

@@ -1,6 +1,8 @@
 import math
 import random
 
+import pytest
+
 from linkgraph.algorithms import (
     clustering_coefficient,
     global_triangle_count,
@@ -19,6 +21,8 @@ from tests.oracles import per_node_triangles_oracle, triangle_oracle
 def test_triangle_count_1(spark):
     g = LinkGraph.from_edge_list(spark, FX.TRIANGLE_GRAPH_1)
     assert global_triangle_count(g) == 4
+    with pytest.raises(ValueError, match="'auto', 'csr', 'jvm'"):
+        global_triangle_count(g, kernel="numpy")
 
 
 def test_triangle_count_motif_graph(spark):

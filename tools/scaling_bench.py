@@ -40,9 +40,6 @@ ITERS = int(os.environ.get("SCALING_ITERS", 24))
 REPS = int(os.environ.get("SCALING_REPS", 1))
 LO = int(os.environ.get("SCALING_LO", 4))
 HI = int(os.environ.get("SCALING_HI", 4 * LO))
-# "superstep" (shipped default at scale) or "blocks" (gathered-CSR Arrow
-# kernel — the north-star adjacency layout) for an at-scale kernel A/B
-KERNEL = os.environ.get("SCALING_KERNEL", "superstep")
 # N and 4N parallelism levels (within physical cores: the sandbox VM
 # advertises 32 vCPUs but sustained all-core throughput tops out near ~20
 # cores-worth, so 8->32 measures the host, not us).  A second pair at
@@ -94,7 +91,7 @@ def worker(cores: int) -> None:
         t0 = time.monotonic()
         res = pagerank_on_ids(
             spark, nodes, edges, max_iter=ITERS, tol=0.0, norm="l1",
-            partitions=2 * cores, pre_deduped=True, kernel=KERNEL,
+            partitions=2 * cores, pre_deduped=True, kernel="superstep",
         )
         res.write.format("noop").mode("overwrite").save()
         w = time.monotonic() - t0
@@ -104,7 +101,7 @@ def worker(cores: int) -> None:
         + json.dumps(
             {
                 "cores": cores,
-                "kernel": KERNEL,
+                "kernel": "superstep",
                 "wall_s": round(wall, 2),
                 "n_edges": n_simple,
                 "iters": ITERS,
@@ -126,7 +123,7 @@ def run_level(cores: int) -> dict:
     # makes each level a faithful stand-in for an N-core cluster slice
     # (JVM 17 reads availableProcessors from the affinity mask, so its
     # internal thread pools size honestly too).
-    log_path = f"/tmp/scaling_worker_{KERNEL}_{cores}.log"
+    log_path = f"/tmp/scaling_worker_{cores}.log"
     with open(log_path, "w") as log:
         subprocess.run(
             [
